@@ -42,7 +42,6 @@ churn cost.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,7 +55,8 @@ from ..functions.text import (
     spark_tokens,
 )
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
+from ..sources.vlog import VersionedLog
 from .incremental import BATCH_MOD, _bands
 from .minhash import BANDS, K, VERIFY_THRESHOLD, _band_key, _duck_sig
 
@@ -76,23 +76,14 @@ def _doc_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-def _latest_ddcidx_version(index_dir: str) -> int:
-    vs = [
-        int(f[len("ddcidx-manifest-v"):-len(".json")])
-        for f in os.listdir(index_dir)
-        if f.startswith("ddcidx-manifest-v") and f.endswith(".json")
-    ] if os.path.isdir(index_dir) else []
-    return max(vs, default=0)
+def _ddcidx_log(index_dir: str) -> VersionedLog:
+    return VersionedLog(index_dir, "ddcidx-manifest")
 
 
 def _load_ddcidx_manifest(
     index_dir: str, version: int | None = None
 ) -> dict:
-    v = version if version is not None else _latest_ddcidx_version(index_dir)
-    with open(
-        os.path.join(index_dir, f"ddcidx-manifest-v{v}.json")
-    ) as f:
-        return json.load(f)
+    return _ddcidx_log(index_dir).load(version)
 
 
 def _write_index_files(
@@ -139,10 +130,7 @@ def build_dedup_cdc_index(
         "n_rows": corpus.count(),
         "n_tombstoned": 0,
     }
-    atomic_json_dump(
-        manifest,
-        os.path.join(index_dir, f"ddcidx-manifest-v{version}.json"),
-    )
+    _ddcidx_log(index_dir).write(manifest, version)
     return manifest
 
 
@@ -187,9 +175,7 @@ def maintain_dedup_index_from_feed(
             table_commit=table_commit,
         )
         m["swapped"] = True
-        atomic_json_dump(
-            m, os.path.join(index_dir, f"ddcidx-manifest-v{vnew}.json")
-        )
+        _ddcidx_log(index_dir).write(m, vnew)
         return m
     vdir = os.path.join(index_dir, f"v{vnew}")
     bands = list(prev["bands"])
@@ -223,9 +209,7 @@ def maintain_dedup_index_from_feed(
         "n_rows": n_rows,
         "n_tombstoned": n_tomb,
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"ddcidx-manifest-v{vnew}.json")
-    )
+    _ddcidx_log(index_dir).write(manifest, vnew)
     release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 
@@ -430,7 +414,7 @@ def dedup_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.mor_cdc import mor_cdc_commit, mor_cdc_init
 
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final_commit}.json")
+        VersionedLog(table_dir).path(final_commit)
     ):
         mor_cdc_init(
             spark, corpus.withColumn("version", F.lit(0)), table_dir,
@@ -438,8 +422,8 @@ def dedup_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i, wave in enumerate(waves):
             mor_cdc_commit(spark, wave, table_dir, 2 + i)
-    if _latest_ddcidx_version(index_dir) < final_commit:
-        if _latest_ddcidx_version(index_dir) < 1:
+    if _ddcidx_log(index_dir).latest() < final_commit:
+        if _ddcidx_log(index_dir).latest() < 1:
             build_dedup_cdc_index(spark, corpus, index_dir)
         while (
             _load_ddcidx_manifest(index_dir)["table_commit"]

@@ -43,7 +43,6 @@ crawl stream without per-crawl df rebuilds.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -51,7 +50,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, persist_scoped
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
+from ..sources.vlog import VersionedLog
 from .bm25 import _ALL_TERMS, _CONTRIB, _IDF, BM25_QUERIES, BM25_TOPK
 from .text import duck_tokens, spark_tokens
 
@@ -65,23 +65,14 @@ TIX_INS_SUFFIX = "stream join arrival"  # new docs carry query terms
 TIX_SWAP_FRACTION = 0.5
 
 
-def _latest_tidx_version(index_dir: str) -> int:
-    vs = [
-        int(f[len("tidx-manifest-v"):-len(".json")])
-        for f in os.listdir(index_dir)
-        if f.startswith("tidx-manifest-v") and f.endswith(".json")
-    ] if os.path.isdir(index_dir) else []
-    return max(vs, default=0)
+def _tidx_log(index_dir: str) -> VersionedLog:
+    return VersionedLog(index_dir, "tidx-manifest")
 
 
 def _load_tidx_manifest(
     index_dir: str, version: int | None = None
 ) -> dict:
-    v = version if version is not None else _latest_tidx_version(index_dir)
-    with open(
-        os.path.join(index_dir, f"tidx-manifest-v{v}.json")
-    ) as f:
-        return json.load(f)
+    return _tidx_log(index_dir).load(version)
 
 
 def _doc_terms(docs: DataFrame) -> DataFrame:
@@ -126,10 +117,7 @@ def build_text_index(
         "n_base_terms": int(n_terms),
         "n_delta_rows": 0,
     }
-    atomic_json_dump(
-        manifest,
-        os.path.join(index_dir, f"tidx-manifest-v{version}.json"),
-    )
+    _tidx_log(index_dir).write(manifest, version)
     return manifest
 
 
@@ -201,9 +189,7 @@ def maintain_text_index_from_feed(
             table_commit=table_commit,
         )
         m["swapped"] = True
-        atomic_json_dump(
-            m, os.path.join(index_dir, f"tidx-manifest-v{vnew}.json")
-        )
+        _tidx_log(index_dir).write(m, vnew)
         return m
     manifest = {
         "version": vnew,
@@ -214,9 +200,7 @@ def maintain_text_index_from_feed(
         "n_base_terms": int(prev["n_base_terms"]),
         "n_delta_rows": n_delta,
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"tidx-manifest-v{vnew}.json")
-    )
+    _tidx_log(index_dir).write(manifest, vnew)
     return manifest
 
 
@@ -430,15 +414,15 @@ def text_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     waves = _text_waves(d)
     final_commit = len(waves) + 1
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final_commit}.json")
+        VersionedLog(table_dir).path(final_commit)
     ):
         mor_cdc_init(
             spark, d.withColumn("version", F.lit(0)), table_dir, "doc_id"
         )
         for i, wave in enumerate(waves):
             mor_cdc_commit(spark, wave, table_dir, 2 + i)
-    if _latest_tidx_version(index_dir) < final_commit:
-        if _latest_tidx_version(index_dir) < 1:
+    if _tidx_log(index_dir).latest() < final_commit:
+        if _tidx_log(index_dir).latest() < 1:
             build_text_index(spark, d, index_dir)
         while (
             _load_tidx_manifest(index_dir)["table_commit"] < final_commit

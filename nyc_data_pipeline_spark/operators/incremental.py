@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..exprs import dec, sql_dsum
 from ..registry import register
+from ..sources.vlog import VersionedLog
 
 MICRO = 1_000_000
 
@@ -589,8 +590,6 @@ def build_join_view(
     from it with ONE dim join (never a second fact pass)."""
     import os as _os
 
-    from ..sources.scans import atomic_json_dump
-
     spark = a1.sparkSession
     vdir = _os.path.join(table_dir, f"v{version}")
     cust_path = _os.path.join(vdir, "cust_view")
@@ -613,9 +612,7 @@ def build_join_view(
     )
     manifest = {"version": version, "cust_view": cust_path,
                 "seg_view": seg_path}
-    atomic_json_dump(
-        manifest, _os.path.join(table_dir, f"manifest-v{version}.json")
-    )
+    VersionedLog(table_dir).write(manifest, version)
     return manifest
 
 
@@ -719,7 +716,6 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate one-shot — a hash match proves maintenance == recompute,
     including customer deletes cascading over that customer's orders
     and the ΔA⋈ΔB cross term (a deleted order of a moved customer)."""
-    import json as _json
     import os as _os
 
     from ..sources.scans import scratch_dir
@@ -727,11 +723,10 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = scratch_dir("ivm_join", sf_dir)
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
-    mpath = _os.path.join(table_dir, "manifest-v1.json")
-    if not _os.path.exists(mpath):
+    log = VersionedLog(table_dir)
+    if not _os.path.exists(log.path(1)):
         build_join_view(a1, b1, table_dir)
-    with open(mpath) as f:
-        m = _json.load(f)
+    m = log.load(1)
     seg_v1 = spark.read.parquet(m["seg_view"])
     cust_v1 = spark.read.parquet(m["cust_view"])
     b2 = b1.filter(F.col("c") % IVM_B_DEL_MOD != 0).withColumn(
@@ -780,13 +775,7 @@ def _resolve_view_fields(
     the current name back to the canonical one.  Legacy chains (no
     field ids) return (None, identity): by-name behavior, unchanged.
     """
-    import json as _json
-    import os as _os
-
-    with open(
-        _os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        schema = _json.load(f).get("schema")
+    schema = VersionedLog(table_dir).load(version).get("schema")
     if schema is None:
         return None, {c: c for c in canon}
     by_name = {f["name"]: f["id"] for f in schema}
@@ -955,10 +944,9 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads commit N-1's artifacts plus the epoch's feeds, never a fact
     table — the O(changes) refresh loop a 100 TB dashboard needs,
     measured flat under fact growth by scripts/ivm_probe.py."""
-    import json as _json
     import os as _os
 
-    from ..sources.scans import atomic_json_dump, scratch_dir
+    from ..sources.scans import scratch_dir
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_commit,
@@ -973,11 +961,11 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
 
-    final_manifest = _os.path.join(view_dir, "manifest-v3.json")
-    if not _os.path.exists(final_manifest):
+    view_log = VersionedLog(view_dir)
+    if not _os.path.exists(view_log.path(3)):
         # --- the two CDC tables: base commits + change epochs
         if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v3.json")
+            VersionedLog(a_dir).path(3)
         ):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
@@ -1009,7 +997,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             mor_cdc_commit(spark, wave_a2, a_dir, 3)
         if not _os.path.exists(
-            _os.path.join(b_dir, "manifest-v2.json")
+            VersionedLog(b_dir).path(2)
         ):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
@@ -1031,23 +1019,18 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             mor_cdc_commit(spark, wave_b, b_dir, 2)
 
         # --- view v1: built over the two v1 table reads
-        if not _os.path.exists(
-            _os.path.join(view_dir, "manifest-v1.json")
-        ):
+        if not _os.path.exists(view_log.path(1)):
             build_join_view(
                 mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
                 mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
                 view_dir,
             )
-        with open(_os.path.join(view_dir, "manifest-v1.json")) as f:
-            m1 = _json.load(f)
+        m1 = view_log.load(1)
         if "a_version" not in m1:
             # cursor columns: which table commits this view reflects —
             # what catch_up_join_view advances from
             m1.update({"a_version": 1, "b_version": 1})
-            atomic_json_dump(
-                m1, _os.path.join(view_dir, "manifest-v1.json")
-            )
+            view_log.write(m1, 1)
 
         # --- refresh 1: ΔA₁ only (B unchanged); advance BOTH views.
         # The signed delta is O(changes): materialize it ONCE (it
@@ -1075,7 +1058,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust_v2.write.mode("overwrite").parquet(
             _os.path.join(v2, "cust_view")
         )
-        atomic_json_dump(
+        view_log.write(
             {
                 "version": 2,
                 "seg_view": _os.path.join(v2, "seg_view"),
@@ -1083,13 +1066,12 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "a_version": 2,
                 "b_version": 1,
             },
-            _os.path.join(view_dir, "manifest-v2.json"),
+            2,
         )
 
         # --- refresh 2: ΔA₂ + ΔB, against the v2 ARTIFACTS (the
         # auxiliary maintained in refresh 1 is load-bearing here)
-        with open(_os.path.join(view_dir, "manifest-v2.json")) as f:
-            m2 = _json.load(f)
+        m2 = view_log.load(2)
         feed_a2 = mor_cdc_change_feed(spark, a_dir, 3)
         da2 = _feed_to_signed_a(feed_a2).localCheckpoint(eager=True)
         release_local_checkpoints(
@@ -1113,7 +1095,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust_v3.write.mode("overwrite").parquet(
             _os.path.join(v3, "cust_view")
         )
-        atomic_json_dump(
+        view_log.write(
             {
                 "version": 3,
                 "seg_view": _os.path.join(v3, "seg_view"),
@@ -1121,7 +1103,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "a_version": 3,
                 "b_version": 2,
             },
-            final_manifest,
+            3,
         )
         # v3 artifacts written: the lazy B feed's sidecars and the
         # frozen signed deltas have no remaining consumers
@@ -1129,8 +1111,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             getattr(feed_b, "_ckpt_intermediates", [])
         )
         release_local_checkpoints([da1, da2])
-    with open(final_manifest) as f:
-        m3 = _json.load(f)
+    m3 = view_log.load(3)
     return spark.read.parquet(m3["seg_view"]).select(
         "segment", "n_rows", "sum_cents"
     )
@@ -1149,26 +1130,8 @@ def load_view_manifest(view_dir: str, version: int) -> dict:
     """Read one view refresh's manifest, distinguishing 'vacuumed'
     (below the retained floor → named retention error) from 'never
     committed' (above the chain head → ValueError)."""
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(view_dir, f"manifest-v{version}.json")
-    if _os.path.exists(p):
-        with open(p) as f:
-            return _json.load(f)
-    from ..streaming.mor_cdc import main_manifest_versions
-
-    retained = main_manifest_versions(view_dir)
-    if retained and version < min(retained):
-        raise ViewRetentionError(
-            f"view refresh v{version} of {view_dir} was reclaimed by "
-            f"view_vacuum (retained floor: v{min(retained)}); refresh "
-            "history is readable only within the retained window"
-        )
-    raise ValueError(
-        f"view refresh v{version} of {view_dir} was never committed "
-        f"(chain head: v{max(retained)})" if retained
-        else f"{view_dir} has no view manifests"
+    return VersionedLog(view_dir, retention_error=ViewRetentionError).load(
+        version
     )
 
 
@@ -1179,41 +1142,28 @@ def view_vacuum(view_dir: str, retain: int = 1) -> dict:
     — the mor_cdc_vacuum rule applied to the view chain, closing the
     unbounded per-refresh accumulation in view_dir).  Pure metadata +
     file ops, O(#refreshes); the materialized pairs are never read.
-    Reads of reclaimed refreshes afterwards raise the named
-    `ViewRetentionError` (see load_view_manifest); the LATEST refresh
-    — cursors included — is untouched, so catch-up keeps working."""
-    import json as _json
+    A refresh staged above the head (artifacts written, manifest not
+    yet published) is never collected.  Reads of reclaimed refreshes
+    afterwards raise the named `ViewRetentionError` (see
+    load_view_manifest); the LATEST refresh — cursors included — is
+    untouched, so catch-up keeps working."""
     import os as _os
-    import shutil as _shutil
 
-    from ..streaming.mor_cdc import main_manifest_versions
+    from ..sources.vlog import DATA_DIR_RE, sweep
 
-    versions = main_manifest_versions(view_dir)
-    keep = set(versions[-retain:])
-    reachable: set[str] = set()
-    for v in keep:
-        with open(_os.path.join(view_dir, f"manifest-v{v}.json")) as f:
-            m = _json.load(f)
-        for k in ("seg_view", "cust_view"):
-            reachable.add(_os.path.dirname(_os.path.abspath(m[k])))
-    removed_dirs = 0
-    for d in _os.listdir(view_dir):
-        full = _os.path.abspath(_os.path.join(view_dir, d))
-        if (
-            d.startswith("v")
-            and _os.path.isdir(full)
-            and full not in reachable
-        ):
-            _shutil.rmtree(full)
-            removed_dirs += 1
-    removed_manifests = 0
-    for v in versions:
-        if v not in keep:
-            _os.unlink(_os.path.join(view_dir, f"manifest-v{v}.json"))
-            removed_manifests += 1
+    log = VersionedLog(view_dir)
+    head = log.latest()
+    removed = log.expire(retain)
+    retained = log.versions()
+    reachable = {
+        _os.path.dirname(_os.path.abspath(log.load(v)[k]))
+        for v in retained
+        for k in ("seg_view", "cust_view")
+    }
+    _, removed_dirs = sweep(view_dir, reachable, head, DATA_DIR_RE)
     return {
-        "retained": sorted(keep),
-        "manifests_removed": removed_manifests,
+        "retained": retained,
+        "manifests_removed": len(removed),
         "dirs_removed": removed_dirs,
     }
 
@@ -1253,10 +1203,8 @@ def catch_up_join_view(
     widen of a projected column mid-catch-up folds exactly like any
     other span, with the renamed column aliased back to the view's
     canonical name.  Evolution commits contribute empty feeds."""
-    import json as _json
     import os as _os
 
-    from ..sources.scans import atomic_json_dump
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed_span,
         mor_cdc_read,
@@ -1276,9 +1224,9 @@ def catch_up_join_view(
             raise ValueError(f"{d} has no main manifests")
         return v
 
+    view_log = VersionedLog(view_dir)
     cur = latest(view_dir)
-    with open(_os.path.join(view_dir, f"manifest-v{cur}.json")) as f:
-        m = _json.load(f)
+    m = view_log.load(cur)
     a_from, b_from = int(m.get("a_version", 1)), int(m.get("b_version", 1))
     # catch up to an explicit bound when given (the CATALOG-visible
     # version — see catch_up_view_from_catalog) instead of whatever
@@ -1373,9 +1321,7 @@ def catch_up_join_view(
         manifest["a_fields"] = a_fields
     if b_fields is not None:
         manifest["b_fields"] = b_fields
-    atomic_json_dump(
-        manifest, _os.path.join(view_dir, f"manifest-v{cur + 1}.json")
-    )
+    view_log.write(manifest, cur + 1)
     # both view artifacts are written: the lazy B feeds' checkpointed
     # sidecars (and the frozen ΔA) have no remaining consumers —
     # release them now rather than at driver GC (ADVICE r11: a
@@ -1397,9 +1343,6 @@ def catch_up_view_from_catalog(
     manifest) instead of one per table.  A table commit that published
     but whose catalog flip is pending (the txn crash window) is
     invisible here exactly as it is to every catalog reader."""
-    import os as _os
-
-    from ..sources.scans import atomic_json_dump
     from ..streaming.txn import catalog_load
 
     cat = catalog_load(catalog_dir, version)
@@ -1413,10 +1356,7 @@ def catch_up_view_from_catalog(
         # the early-return path re-stamps the same manifest in place)
         m = dict(m)
         m["catalog_version"] = cat["version"]
-        atomic_json_dump(
-            m,
-            _os.path.join(view_dir, f"manifest-v{m['version']}.json"),
-        )
+        VersionedLog(view_dir).write(m, m["version"])
     return m
 
 
@@ -1454,9 +1394,9 @@ def catalog_read_view_as_of(
     read the view AT THAT SNAPSHOT — the dashboard state a reader saw
     at that instant, guaranteed consistent with the base tables the
     same catalog version pins."""
-    from ..sources.timetravel import resolve_version_as_of
+    from ..streaming.txn import _catalog_log
 
-    v = resolve_version_as_of(catalog_dir, ts_us, prefix="catalog-v")
+    v = _catalog_log(catalog_dir).as_of(ts_us)
     return catalog_read_view(spark, catalog_dir, view_name, v)
 
 
@@ -1548,7 +1488,6 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and a later flip delivers it through the same API, pytest-pinned).
     The oracle recomputes the join over the catalog-visible states
     only."""
-    import json as _json
     import os as _os
 
     from ..sources.scans import scratch_dir
@@ -1569,11 +1508,11 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     view_dir = scratch_dir("ivmcat_view", sf_dir)
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
-    if not _os.path.exists(_os.path.join(a_dir, "manifest-v1.json")):
+    if not _os.path.exists(VersionedLog(a_dir).path(1)):
         mor_cdc_init(
             spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
         )
-    if not _os.path.exists(_os.path.join(b_dir, "manifest-v1.json")):
+    if not _os.path.exists(VersionedLog(b_dir).path(1)):
         mor_cdc_init(
             spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
         )
@@ -1581,7 +1520,7 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_catalog_init(
             cat_dir, {"orders": (a_dir, 1), "customer": (b_dir, 1)}
         )
-    if not _os.path.exists(_os.path.join(a_dir, "manifest-v2.json")):
+    if not _os.path.exists(VersionedLog(a_dir).path(2)):
         wave_a = (
             a1.filter(F.col("k") % IVMCAT_A_MOD == 0)
             .withColumn("cents", F.col("cents") + 7)
@@ -1589,7 +1528,7 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("op", F.lit("u"))
         )
         mor_cdc_commit(spark, wave_a, a_dir, 2)
-    if not _os.path.exists(_os.path.join(b_dir, "manifest-v2.json")):
+    if not _os.path.exists(VersionedLog(b_dir).path(2)):
         wave_b = (
             b1.filter(F.col("c") % IVMCAT_B_MOD == 0)
             .withColumn("segment", F.lit("MOVEDX"))
@@ -1598,7 +1537,7 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         mor_cdc_commit(spark, wave_b, b_dir, 2)
     txn_commit(cat_dir, {"orders": 2, "customer": 2})
-    if not _os.path.exists(_os.path.join(a_dir, "manifest-v3.json")):
+    if not _os.path.exists(VersionedLog(a_dir).path(3)):
         # the crash window: published at the table, NO catalog flip
         pend = (
             a1.filter(F.col("k") % IVMCAT_PEND_MOD == 0)
@@ -1607,22 +1546,15 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("op", F.lit("u"))
         )
         mor_cdc_commit(spark, pend, a_dir, 3)
-    if not _os.path.exists(_os.path.join(view_dir, "manifest-v1.json")):
+    if not _os.path.exists(VersionedLog(view_dir).path(1)):
         build_join_view(
             mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
             mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
             view_dir,
         )
-        with open(
-            _os.path.join(view_dir, "manifest-v1.json")
-        ) as f:
-            m1 = _json.load(f)
+        m1 = VersionedLog(view_dir).load(1)
         m1.update({"a_version": 1, "b_version": 1})
-        from ..sources.scans import atomic_json_dump
-
-        atomic_json_dump(
-            m1, _os.path.join(view_dir, "manifest-v1.json")
-        )
+        VersionedLog(view_dir).write(m1, 1)
     m = catch_up_view_from_catalog(
         spark, view_dir, cat_dir, "orders", "customer"
     )
@@ -1715,16 +1647,16 @@ def ivm_view_txn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
     if catalog_latest(cat_dir) < 3:
-        if not _os.path.exists(_os.path.join(a_dir, "manifest-v1.json")):
+        if not _os.path.exists(VersionedLog(a_dir).path(1)):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
             )
-        if not _os.path.exists(_os.path.join(b_dir, "manifest-v1.json")):
+        if not _os.path.exists(VersionedLog(b_dir).path(1)):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
             )
         if not _os.path.exists(
-            _os.path.join(view_dir, "manifest-v1.json")
+            VersionedLog(view_dir).path(1)
         ):
             build_join_view(
                 mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
@@ -1733,11 +1665,7 @@ def ivm_view_txn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             m1 = load_view_manifest(view_dir, 1)
             m1.update({"a_version": 1, "b_version": 1})
-            from ..sources.scans import atomic_json_dump
-
-            atomic_json_dump(
-                m1, _os.path.join(view_dir, "manifest-v1.json")
-            )
+            VersionedLog(view_dir).write(m1, 1)
         if catalog_latest(cat_dir) < 1:
             txn_catalog_init(
                 cat_dir,
@@ -1862,10 +1790,9 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at-least-once redelivery hygiene — the reference's consumer →
     dashboard loop (spark_consumer.py:106 → streamlit rerun) as an
     O(changes) refresh instead of a per-refresh rescan."""
-    import json as _json
     import os as _os
 
-    from ..sources.scans import atomic_json_dump, scratch_dir
+    from ..sources.scans import scratch_dir
     from ..streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -1879,17 +1806,8 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = _ivm_b1(spark, sf_dir)
 
     def _latest_view_manifest() -> dict | None:
-        if not _os.path.isdir(view_dir):
-            return None
-        from ..streaming.mor_cdc import main_manifest_versions
-
-        vs = main_manifest_versions(view_dir)
-        if not vs:
-            return None
-        with open(
-            _os.path.join(view_dir, f"manifest-v{max(vs)}.json")
-        ) as f:
-            return _json.load(f)
+        log = VersionedLog(view_dir)
+        return log.load() if log.latest() else None
 
     # Completion is decided by CURSOR VALUES on the latest view
     # manifest, never a hardcoded version number: a crash anywhere in
@@ -1914,7 +1832,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # --- table A: base + two change epochs
         if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v3.json")
+            VersionedLog(a_dir).path(3)
         ):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
@@ -1938,7 +1856,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             mor_cdc_commit(spark, wave_a2, a_dir, 3)
         # --- table B: base + churn/move epoch
         if not _os.path.exists(
-            _os.path.join(b_dir, "manifest-v2.json")
+            VersionedLog(b_dir).path(2)
         ):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
@@ -1964,7 +1882,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         # further ahead and the fold simply absorbs more (the cursor
         # check at the end is what certifies convergence).
         if not _os.path.exists(
-            _os.path.join(view_dir, "manifest-v1.json")
+            VersionedLog(view_dir).path(1)
         ):
             m1 = build_join_view(
                 mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
@@ -1972,14 +1890,12 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 view_dir,
             )
             m1.update({"a_version": 1, "b_version": 1})
-            atomic_json_dump(
-                m1, _os.path.join(view_dir, "manifest-v1.json")
-            )
+            VersionedLog(view_dir).write(m1, 1)
         catch_up_join_view(spark, view_dir, a_dir, b_dir)
         # --- more commits land while the view sleeps: a re-score
         # wave, a STALE redelivery of wave 1, a second move wave
         if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v4.json")
+            VersionedLog(a_dir).path(4)
         ):
             wave_a3 = (
                 a1.filter(
@@ -1999,11 +1915,11 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             mor_cdc_commit(spark, wave_a3, a_dir, 4)
         if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v5.json")
+            VersionedLog(a_dir).path(5)
         ):
             mor_cdc_commit(spark, wave_a1, a_dir, 5)  # stale redelivery
         if not _os.path.exists(
-            _os.path.join(b_dir, "manifest-v3.json")
+            VersionedLog(b_dir).path(3)
         ):
             wave_b2 = (
                 mor_cdc_read(spark, b_dir, 2)

@@ -44,7 +44,6 @@ extension (SURVEY §2) composed with the CDC lane.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,7 +51,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
+from ..sources.vlog import VersionedLog
 from .adc import N_CODES, N_SUB, SEED_SPLIT, _codebook, _micro_rows, pq_assign
 from .brute_force import N_QUERIES, TOP_K
 from .centroids import MICRO, PQ_SUB_DIMS
@@ -111,21 +111,14 @@ def _emb_cdc_wave(emb: DataFrame) -> DataFrame:
     return upd.unionByName(dele).unionByName(ins)
 
 
-def _latest_cdcidx_version(index_dir: str) -> int:
-    vs = [
-        int(f[len("cdcidx-manifest-v"):-len(".json")])
-        for f in os.listdir(index_dir)
-        if f.startswith("cdcidx-manifest-v") and f.endswith(".json")
-    ] if os.path.isdir(index_dir) else []
-    return max(vs, default=0)
+def _cdcidx_log(index_dir: str) -> VersionedLog:
+    return VersionedLog(index_dir, "cdcidx-manifest")
 
 
-def _load_cdcidx_manifest(index_dir: str, version: int | None = None) -> dict:
-    v = version if version is not None else _latest_cdcidx_version(index_dir)
-    with open(
-        os.path.join(index_dir, f"cdcidx-manifest-v{v}.json")
-    ) as f:
-        return json.load(f)
+def _load_cdcidx_manifest(
+    index_dir: str, version: int | None = None
+) -> dict:
+    return _cdcidx_log(index_dir).load(version)
 
 
 def build_cdc_index(
@@ -175,9 +168,7 @@ def build_cdc_index(
             "micro": MICRO,
         },
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"cdcidx-manifest-v{version}.json")
-    )
+    _cdcidx_log(index_dir).write(manifest, version)
     return manifest
 
 
@@ -228,9 +219,7 @@ def maintain_ivf_pq_from_feed(
             table_commit=table_commit,
         )
         m["swapped"] = True
-        atomic_json_dump(
-            m, os.path.join(index_dir, f"cdcidx-manifest-v{vnew}.json")
-        )
+        _cdcidx_log(index_dir).write(m, vnew)
         return m
     cent = spark.read.parquet(prev["centroids"])
     cmicro = spark.read.parquet(prev["codebook"])
@@ -276,9 +265,7 @@ def maintain_ivf_pq_from_feed(
         "n_appended": n_ins + n_upd,
         "params": prev["params"],
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"cdcidx-manifest-v{vnew}.json")
-    )
+    _cdcidx_log(index_dir).write(manifest, vnew)
     release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 
@@ -495,12 +482,12 @@ def sim_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb_dir = scratch_dir("embcdc_table", sf_dir)
     index_dir = scratch_dir("embcdc_index", sf_dir)
-    if not os.path.exists(os.path.join(emb_dir, "manifest-v1.json")):
+    if not os.path.exists(VersionedLog(emb_dir).path(1)):
         mor_cdc_init(
             spark, emb.withColumn("version", F.lit(0)), emb_dir, "vec_id"
         )
     if not os.path.exists(
-        os.path.join(index_dir, "cdcidx-manifest-v1.json")
+        _cdcidx_log(index_dir).path(1)
     ):
         build_cdc_index(
             spark,
@@ -511,10 +498,10 @@ def sim_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             version=1,
             table_commit=1,
         )
-    if not os.path.exists(os.path.join(emb_dir, "manifest-v2.json")):
+    if not os.path.exists(VersionedLog(emb_dir).path(2)):
         mor_cdc_commit(spark, _emb_cdc_wave(emb), emb_dir, 2)
     if not os.path.exists(
-        os.path.join(index_dir, "cdcidx-manifest-v2.json")
+        _cdcidx_log(index_dir).path(2)
     ):
         maintain_ivf_pq_from_feed(spark, emb_dir, index_dir)
     m = _load_cdcidx_manifest(index_dir, 2)

@@ -73,19 +73,31 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
 
 
 def atomic_json_dump(obj, path: str) -> None:
-    """Commit a JSON metadata file atomically: write to a temp file in
-    the SAME directory, fsync, then os.replace() into place.  Every
-    manifest/ledger pointer in the storage layer routes through this —
-    a crash mid-write must never leave a torn manifest visible to
+    """Overwrite-publish a JSON metadata file atomically: write a
+    dot-hidden temp file in the SAME directory (never listed by a
+    Spark scan of that directory), fsync, then os.replace() into
+    place.  A crash mid-write never leaves a torn file visible to
     readers or an unparseable ledger that bricks future commits (the
-    lakehouse commit protocol's one filesystem assumption: same-dir
-    rename is atomic on POSIX)."""
+    one filesystem assumption: same-dir rename is atomic on POSIX).
+
+    Manifest chains do not call this directly: every `{prefix}-v{N}.
+    json` goes through `sources.vlog.VersionedLog`, whose `write` is
+    this overwrite and whose `publish` is `atomic_json_publish_once`.
+    The lanes still on the overwrite are the single-writer ones whose
+    crash-recovery contract is "a rerun rewrites the same version":
+    the scripted lifecycle builders (`mor_cdc_init`, non-exclusive
+    `mor_cdc_commit` / `_zm_append`, the COW/MOR-on-COW writers,
+    `timetravel.write_version`), the index lanes (a swap re-stamps
+    the version it just built) and the view refreshes (cursor and
+    catalog stamps rewrite a refresh in place) — a CAS would refuse
+    every one of those reruns.  Ledgers and other single files
+    (epoch ledger, rollup compaction manifest) call this directly."""
     import json as _json
     import tempfile as _tempfile
 
     d = os.path.dirname(path) or "."
     os.makedirs(d, exist_ok=True)
-    fd, tmp = _tempfile.mkstemp(dir=d, suffix=".tmp")
+    fd, tmp = _tempfile.mkstemp(dir=d, prefix=".", suffix=".tmp")
     try:
         with os.fdopen(fd, "w") as f:
             _json.dump(obj, f, sort_keys=True)
@@ -103,17 +115,24 @@ def atomic_json_dump(obj, path: str) -> None:
 def atomic_json_publish_once(obj, path: str) -> None:
     """Compare-and-swap publish: like `atomic_json_dump` but the final
     step is link(2) from a writer-unique temp name, which is atomic
-    AND fails with FileExistsError if `path` already exists — the
-    Iceberg snapshot-CAS analog on plain files.  Exactly one of any
-    number of concurrent publishers of the same path succeeds; the
-    losers get a loud FileExistsError to translate into their commit-
-    conflict protocol, never a silent last-write-wins overwrite."""
+    AND fails with FileExistsError if `path` already exists — Delta
+    Lake's log-commit rule on plain files.  Exactly one of any number
+    of concurrent publishers of the same path succeeds; the losers get
+    a loud FileExistsError, never a silent last-write-wins overwrite.
+
+    `VersionedLog.publish` is the only caller in the package: it
+    resolves this function through the module at call time (tests
+    patch it as the race-window seam) and turns FileExistsError into
+    `CommitConflictError`.  Every multi-writer commit uses it:
+    exclusive MOR commits (`MorCdcSink`), WAP branch staging and
+    publish, schema evolutions and compactions on both lanes,
+    exclusive COW appends and catalog transactions."""
     import json as _json
     import tempfile as _tempfile
 
     d = os.path.dirname(path) or "."
     os.makedirs(d, exist_ok=True)
-    fd, tmp = _tempfile.mkstemp(dir=d, suffix=".tmp")
+    fd, tmp = _tempfile.mkstemp(dir=d, prefix=".", suffix=".tmp")
     try:
         with os.fdopen(fd, "w") as f:
             _json.dump(obj, f, sort_keys=True)

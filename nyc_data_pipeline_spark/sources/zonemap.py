@@ -50,11 +50,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-# the CAS publish resolves through the MODULE at call time —
-# tests patch scans.atomic_json_publish_once as the deterministic
-# race-window seam, so never bind it at import
-from . import scans as _scans
 from .scans import atomic_json_dump, field_id_hwm, scratch_dir
+from .vlog import DATA_DIR_RE, CommitConflictError, VersionedLog, sweep
 
 
 def _read_json_table(path: str) -> list[dict]:
@@ -680,9 +677,7 @@ def _zm_versioned_write(
             for z, path in files.items()
             for p in (path if isinstance(path, list) else [path])
         }
-    atomic_json_dump(
-        manifest, os.path.join(table_dir, f"manifest-v{version}.json")
-    )
+    VersionedLog(table_dir).write(manifest, version)
     return manifest
 
 
@@ -769,10 +764,7 @@ def _grouped_manifest_scan(
 def _zm_read_version(
     spark: SparkSession, table_dir: str, version: int
 ) -> DataFrame:
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        manifest = json.load(f)
+    manifest = VersionedLog(table_dir).load(version)
     return _grouped_manifest_scan(spark, manifest["files"], manifest)
 
 
@@ -968,7 +960,7 @@ def src_cow_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already committed (scratch is pid-scoped, so an existing v2 was
     # written by this process with this code — a change-feed consumer
     # reads committed history, it never re-runs the producer's merge).
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(2)):
         merge_zone_map_cow(spark, sf_dir).collect()
     return change_feed_from(spark, table_dir)
 
@@ -991,14 +983,8 @@ def change_feed_from(
     diffable.  Value columns are the TO-schema's non-key, non-cluster
     fields; legacy chains (no field ids) keep the original k/cents
     shape."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{from_version}.json")
-    ) as f:
-        m1 = json.load(f)
-    with open(
-        os.path.join(table_dir, f"manifest-v{to_version}.json")
-    ) as f:
-        m2 = json.load(f)
+    m1 = VersionedLog(table_dir).load(from_version)
+    m2 = VersionedLog(table_dir).load(to_version)
     # normalize entries before comparing (ADVICE r14): _zm_append
     # rewrites every bucket's entry from a path STRING to a LIST, so
     # a raw != across an append commit would mark ALL buckets
@@ -1163,18 +1149,13 @@ def _zm_append(
     overwrite-idempotent publishes for single-writer lifecycle
     rebuilds (crash-recovery contract: rerun rewrites the same
     version)."""
-    mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-    if exclusive and os.path.exists(mpath):
-        from ..streaming.mor_cdc import CommitConflictError
-
+    log = VersionedLog(table_dir)
+    if exclusive and os.path.exists(log.path(version)):
         raise CommitConflictError(
             f"manifest v{version} of {table_dir} already published by "
             "another writer; retry from a fresh read"
         )
-    with open(
-        os.path.join(table_dir, f"manifest-v{version - 1}.json")
-    ) as f:
-        prev = json.load(f)
+    prev = log.load(version - 1)
     lo, hi = prev["bounds"]
     if exclusive:
         import uuid
@@ -1273,22 +1254,15 @@ def _zm_append(
             },
         }
     if exclusive:
-        import shutil
-
-
         try:
-            _scans.atomic_json_publish_once(manifest, mpath)
-        except FileExistsError:
-            from ..streaming.mor_cdc import CommitConflictError
+            log.publish(manifest, version)
+        except CommitConflictError:
+            import shutil
 
             shutil.rmtree(vdir, ignore_errors=True)
-            raise CommitConflictError(
-                f"manifest v{version} of {table_dir} was published by "
-                "a concurrent writer between stage and publish; retry "
-                "from a fresh read"
-            ) from None
+            raise
     else:
-        atomic_json_dump(manifest, mpath)
+        log.write(manifest, version)
     return manifest
 
 
@@ -1325,7 +1299,7 @@ def src_zone_map_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     inheritance (no v2 row lost, none changed) and the frozen-bounds
     file routing are both hash-checked."""
     table_dir = scratch_dir("zm_merge", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(2)):
         merge_zone_map_cow(spark, sf_dir).collect()
     batch = (
         _orders_kcd(spark, sf_dir)
@@ -1498,38 +1472,19 @@ def manifest_vacuum(table_dir: str, latest: int) -> dict:
     pointing at nothing — committed-data loss.  A crashed writer's
     orphan at head+1 is still reclaimed: the next successful commit
     moves the head past it and the following vacuum collects it."""
-    import re as _re
-    import shutil
-
-    retained = range(latest - RETAIN_VERSIONS + 1, latest + 1)
+    log = VersionedLog(table_dir)
     reachable: set[str] = set()
-    for v in retained:
-        with open(os.path.join(table_dir, f"manifest-v{v}.json")) as f:
-            m = json.load(f)
-        for paths in m["files"].values():
+    for v in range(latest - RETAIN_VERSIONS + 1, latest + 1):
+        for paths in log.load(v)["files"].values():
             reachable.update(
                 paths if isinstance(paths, list) else [paths]
             )
-    present = {
-        os.path.join(table_dir, vd, zd)
-        for vd in os.listdir(table_dir)
-        if (vm := _re.fullmatch(r"v(\d+)(?:-[0-9a-f]+)?", vd))
-        and int(vm.group(1)) <= latest
-        and os.path.isdir(os.path.join(table_dir, vd))
-        for zd in os.listdir(os.path.join(table_dir, vd))
-        if zd.startswith("zb=")
-    }
-    removable = sorted(present - reachable)
-    for path in removable:
-        shutil.rmtree(path)
-    for v in range(1, latest - RETAIN_VERSIONS + 1):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        if os.path.exists(mp):
-            os.remove(mp)
+    present, removed = sweep(table_dir, reachable, latest, DATA_DIR_RE, "zb=")
+    log.expire(RETAIN_VERSIONS, head=latest)
     return {
-        "dirs_before": len(present),
-        "dirs_removed": len(removable),
-        "dirs_after": len(present) - len(removable),
+        "dirs_before": present,
+        "dirs_removed": removed,
+        "dirs_after": present - removed,
     }
 
 
@@ -1582,9 +1537,9 @@ def src_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     after) from the raw rows alone."""
     table_dir = scratch_dir("zm_vacuum", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v3.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(3)):
         if not os.path.exists(
-            os.path.join(table_dir, "manifest-v2.json")
+            VersionedLog(table_dir).path(2)
         ):
             cow_merge(spark, base, table_dir).collect()
         batch = base.filter(F.col("k") % MRG_APP_MOD == 0).select(
@@ -1596,13 +1551,12 @@ def src_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idempotent re-run: the vacuum record IS the commit — a second
     # invocation reports the recorded reclamation, it does not vacuum
     # an already-vacuumed table into different numbers.
-    record = os.path.join(table_dir, "vacuum-v3.json")
-    if os.path.exists(record):
-        with open(record) as f:
-            stats = json.load(f)
+    record = VersionedLog(table_dir, "vacuum")
+    if os.path.exists(record.path(3)):
+        stats = record.load(3)
     else:
         stats = manifest_vacuum(table_dir, latest=3)
-        atomic_json_dump(stats, record)
+        record.write(stats, 3)
     out = None
     for version in (2, 3):
         piece = (
@@ -1811,7 +1765,7 @@ def _mor_delete_commit(
             m1.get("committed_at_us")
         ),
     }
-    atomic_json_dump(manifest, os.path.join(table_dir, "manifest-v2.json"))
+    VersionedLog(table_dir).write(manifest, 2)
     return manifest
 
 
@@ -1825,10 +1779,7 @@ def _mor_read(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
     O(#files) — the `mor_cdc_read` shape (streaming/mor_cdc.py),
     converged here per VERDICT r9 ask #1 after SCALE.md §22 measured
     the per-bucket form 3.5× slower at 80 files."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(version)
     dv_buckets = (
         set(m.get("dv_buckets", [])) if m.get("delete_vectors") else set()
     )
@@ -1889,7 +1840,7 @@ def src_mor_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector contents, and both versions' totals."""
     table_dir = scratch_dir("zm_mor", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v1.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(1)):
         lo, hi = base.agg(F.min("day"), F.max("day")).collect()[0]
         b1 = range_buckets(base, "day", ZM_FILES).withColumnRenamed(
             "bucket", "zb"
@@ -1899,13 +1850,11 @@ def src_mor_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             [str(z) for z in range(ZM_FILES)], None, (lo, hi),
         )
     else:
-        with open(os.path.join(table_dir, "manifest-v1.json")) as f:
-            m1 = json.load(f)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+        m1 = VersionedLog(table_dir).load(1)
+    if not os.path.exists(VersionedLog(table_dir).path(2)):
         m2 = _mor_delete_commit(spark, table_dir, m1)
     else:
-        with open(os.path.join(table_dir, "manifest-v2.json")) as f:
-            m2 = json.load(f)
+        m2 = VersionedLog(table_dir).load(2)
     dv_rows = len(_read_json_table(m2["delete_vectors"]))
     out = None
     for version in (1, 2):
@@ -1969,11 +1918,10 @@ def src_mor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     full churn story: cheap O(keys) delete commits, deferred
     O(touched-files) rewrite, reachability reclaim."""
     table_dir = scratch_dir("zm_mor", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(2)):
         src_mor_delete_vectors(spark, sf_dir).collect()
-    with open(os.path.join(table_dir, "manifest-v2.json")) as f:
-        m2 = json.load(f)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v3.json")):
+    m2 = VersionedLog(table_dir).load(2)
+    if not os.path.exists(VersionedLog(table_dir).path(3)):
         compacted = None
         for z in m2["dv_buckets"]:
             piece = _mor_read_bucket(spark, m2, z)
@@ -2002,10 +1950,9 @@ def src_mor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 m2.get("committed_at_us")
             ),
         }
-        atomic_json_dump(m3, os.path.join(table_dir, "manifest-v3.json"))
+        VersionedLog(table_dir).write(m3, 3)
     else:
-        with open(os.path.join(table_dir, "manifest-v3.json")) as f:
-            m3 = json.load(f)
+        m3 = VersionedLog(table_dir).load(3)
     return (
         _zm_read_version(spark, table_dir, 3)
         .agg(
@@ -2076,7 +2023,7 @@ def ivm_change_feed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     `merge_zone_map_cow` (the commits) + `change_feed_from` (the
     deltas, rewritten-files-only) into the IVM pattern."""
     table_dir = scratch_dir("zm_merge", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(2)):
         merge_zone_map_cow(spark, sf_dir).collect()
     grp = lambda c: (F.col(c) % IVM_GRP_MOD).cast("bigint")  # noqa: E731
     view1 = (
@@ -2147,17 +2094,10 @@ _COW_WIDENINGS = {("int", "bigint"), ("float", "double")}
 
 
 def _cow_latest_version(table_dir: str) -> int:
-    import re as _re
-
-    pat = _re.compile(r"manifest-v(\d+)\.json")
-    vs = [
-        int(m.group(1))
-        for f in os.listdir(table_dir)
-        if (m := pat.fullmatch(f))
-    ]
-    if not vs:
+    version = VersionedLog(table_dir).latest()
+    if not version:
         raise ValueError(f"{table_dir} has no manifests")
-    return max(vs)
+    return version
 
 
 def _cow_evolve(table_dir: str, mutate, evolution: dict) -> dict:
@@ -2169,10 +2109,7 @@ def _cow_evolve(table_dir: str, mutate, evolution: dict) -> dict:
     evolution/compaction targeting the same next version loses with
     the named `CommitConflictError`, never a silent clobber."""
     version = _cow_latest_version(table_dir)
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(version)
     if m.get("schema") is None:
         raise ValueError(
             f"{table_dir} predates field-id schemas; rename/widen "
@@ -2207,19 +2144,7 @@ def _cow_evolve(table_dir: str, mutate, evolution: dict) -> dict:
         max((int(f["id"]) for f in schema), default=0),
     )
 
-    try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
-        from ..streaming.mor_cdc import CommitConflictError
-
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this evolution "
-            f"({evolution.get('op')}) was in flight; re-run against "
-            "the new head"
-        ) from None
+    VersionedLog(table_dir).publish(manifest, vnew)
     return manifest
 
 
@@ -2283,10 +2208,7 @@ def cow_compact(
     import uuid
 
     version = _cow_latest_version(table_dir)
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(version)
     live = _zm_read_version(spark, table_dir, version)
     vnew = version + 1
     # writer-unique staged name + CAS publish (VERDICT r13 ask #6,
@@ -2358,17 +2280,10 @@ def cow_compact(
         }
 
     try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
-        from ..streaming.mor_cdc import CommitConflictError
-
+        VersionedLog(table_dir).publish(manifest, vnew)
+    except CommitConflictError:
         shutil.rmtree(vdir, ignore_errors=True)
-        with open(
-            os.path.join(table_dir, f"manifest-v{vnew}.json")
-        ) as f:
-            winner = json.load(f)
+        winner = VersionedLog(table_dir).load(vnew)
         # EQUIVALENCE, not just same source version (ADVICE r14, the
         # mor_cdc_compact rule): the winner must have produced the
         # same occupied-bucket count AND the same cluster_field — a
@@ -2381,11 +2296,7 @@ def cow_compact(
             == manifest.get("cluster_field")
         ):
             return winner  # an equivalent compaction won the race
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this compaction was in flight; "
-            "re-run against the new head"
-        ) from None
+        raise
     return manifest
 
 
@@ -2398,10 +2309,7 @@ def cow_read_pruned(
     are keyed by FIELD ID through `cluster_field`, so pruning is
     unaffected by renaming the cluster column.  Returns
     (id-projected df or None, files_scanned, files_total)."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(version)
     fs = m.get("file_stats")
     if fs is None:
         raise ValueError(
@@ -2485,7 +2393,7 @@ def src_cow_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _orders_kcd(spark, sf_dir).withColumn(
         "cents", F.col("cents").cast("int")
     )
-    if not os.path.exists(os.path.join(table_dir, "manifest-v4.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(4)):
         # rerun-safe (ADVICE r14): a crash between the v3 rename and
         # the v4 widen would otherwise leave partial state whose rerun
         # hits the evolution CAS (CommitConflictError) — scratch is
@@ -2577,7 +2485,7 @@ def src_cow_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
     [GAP] build-out) and the stored values only on post-re-add rows."""
     table_dir = scratch_dir("cow_readd", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v6.json")):
+    if not os.path.exists(VersionedLog(table_dir).path(6)):
         # rerun-safe: a crashed partial lifecycle rebuilds from v1
         # (scratch is pid-scoped; partial state means OUR earlier
         # attempt died mid-chain — evolution commits are CAS-once)

@@ -98,11 +98,15 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-# the CAS publish resolves through the MODULE at call time —
-# tests patch scans.atomic_json_publish_once as the deterministic
-# race-window seam, so never bind it at import
-from ..sources import scans as _scans
 from ..sources.scans import atomic_json_dump, field_id_hwm, scratch_dir
+from ..sources.vlog import (
+    BRANCH_NAME_RE,
+    DATA_DIR_RE,
+    DV_DIR_RE,
+    CommitConflictError,
+    VersionedLog,
+    sweep,
+)
 
 MOR_CDC_FILES = 8  # bucket fan-out of the fixture table
 
@@ -113,27 +117,6 @@ MOR_CDC_FILES = 8  # bucket fan-out of the fixture table
 # as a visible slice of the per-commit feed cost at sf0.1, pure waste
 # at any scale.
 DV_SIDECAR_SCHEMA = "zb bigint, k bigint, v bigint"
-
-
-class CommitConflictError(RuntimeError):
-    """Two writers raced the same manifest version and this one lost.
-
-    Concurrency contract (VERDICT r11 ask #3 — the Iceberg
-    snapshot-CAS analog on plain files): an EXCLUSIVE commit stages
-    its artifacts under writer-unique directory names
-    (`v{{N}}-{{token}}`, `dv-v{{N}}-{{token}}`) so concurrent stagers
-    never touch the same files, then publishes `manifest-v{{N}}.json`
-    via link(2) from a writer-unique temp name — atomic, and EEXIST if
-    another writer landed N first.  Exactly one writer per version
-    number wins; every loser gets this named error and must RETRY FROM
-    A FRESH READ (re-derive N from the advanced manifest chain /
-    ledger and restage — `MorCdcSink` does this automatically).  A
-    pre-check also raises this error when the target manifest or the
-    ledger is already past the expected version, saving the stage work
-    when the conflict is already visible.  Loser/crashed stage
-    directories are unreferenced by ANY manifest and are reclaimed by
-    `mor_cdc_vacuum`'s reachability sweep.  Compaction (`OPTIMIZE`) is
-    single-operator by contract and keeps the non-exclusive path."""
 
 
 class ChangeFeedRetentionError(RuntimeError):
@@ -244,7 +227,7 @@ def mor_cdc_init(
         "commit_cols": {"1": {str(f["id"]): f["name"] for f in schema}},
         "committed_at_us": commit_wallclock_us(None),
     }
-    atomic_json_dump(manifest, os.path.join(table_dir, "manifest-v1.json"))
+    VersionedLog(table_dir).write(manifest, 1)
     return manifest
 
 
@@ -282,15 +265,13 @@ def mor_cdc_commit(
     `manifest-v*.json` names), and staging always runs exclusive —
     a main writer landing the same version number first is a conflict
     surfaced HERE, at stage time, not later at publish."""
+    main = log = VersionedLog(table_dir)
+    parent = main
     if branch is not None:
         _check_branch_name(branch)
         exclusive = True
-        mpath = os.path.join(
-            table_dir, f"manifest-{branch}-v{version}.json"
-        )
-        if os.path.exists(
-            os.path.join(table_dir, f"manifest-v{version}.json")
-        ):
+        log = main.branch(branch)
+        if os.path.exists(main.path(version)):
             # main advanced past the branch point: publishing this
             # staged commit could never fast-forward — fail early
             raise CommitConflictError(
@@ -298,26 +279,15 @@ def mor_cdc_commit(
                 f"branch {branch!r} is stale — discard and restage "
                 "from the new head"
             )
-        parent = os.path.join(
-            table_dir, f"manifest-{branch}-v{version - 1}.json"
-        )
-        if not os.path.exists(parent):
-            parent = os.path.join(
-                table_dir, f"manifest-v{version - 1}.json"
-            )
-    else:
-        mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-        parent = os.path.join(
-            table_dir, f"manifest-v{version - 1}.json"
-        )
-    if exclusive and os.path.exists(mpath):
+        if os.path.exists(log.path(version - 1)):
+            parent = log
+    if exclusive and os.path.exists(log.path(version)):
         # conflict already visible: fail before staging any artifacts
         raise CommitConflictError(
             f"manifest v{version} of {table_dir} already published by "
             "another writer; retry from a fresh read"
         )
-    with open(parent) as f:
-        prev = json.load(f)
+    prev = parent.load(version - 1)
     key = prev["key"]
     lo, hi = prev["bounds"]
     # The clustering spec travels IN the manifest chain: a commit
@@ -469,24 +439,19 @@ def mor_cdc_commit(
     if _before_publish is not None:
         _before_publish()
     if exclusive:
-        import shutil
-
-
         try:
-            _scans.atomic_json_publish_once(manifest, mpath)
-        except FileExistsError:
+            log.publish(manifest, version)
+        except CommitConflictError:
+            import shutil
+
             # lost the CAS: remove OUR staged dirs (they are writer-
             # unique, so this touches no winner artifacts) and raise
             for d in (dv_dir, vdir):
                 shutil.rmtree(d, ignore_errors=True)
             release_local_checkpoints([routed])
-            raise CommitConflictError(
-                f"manifest v{version} of {table_dir} was published by "
-                "a concurrent writer between stage and publish; retry "
-                "from a fresh read"
-            ) from None
+            raise
     else:
-        atomic_json_dump(manifest, mpath)
+        log.write(manifest, version)
     # both consumers (DV sidecar + appended files) have written: the
     # routed batch's checkpoint blocks are dead weight from here
     release_local_checkpoints([routed])
@@ -532,10 +497,7 @@ def mor_cdc_read(
     contain it; entries written before stats existed are conservatively
     kept.  At 100 TB a point-ish lookup on the clustering key reads
     O(overlapping files), not the table."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(version)
     return _read_manifest(spark, m, zb_filter, key_range)
 
 
@@ -756,10 +718,7 @@ def _evolve_schema_commit(
     loudly in the mutator (e.g. "no column <old>") rather than
     double-applying."""
     version = _latest_main_version(table_dir)
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(version)
     if m.get("schema") is None:
         raise ValueError(
             f"{table_dir} predates field-id schemas; rename/drop/widen "
@@ -797,17 +756,7 @@ def _evolve_schema_commit(
         str(vnew): {str(f["id"]): f["name"] for f in schema},
     }
 
-    try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this evolution "
-            f"({evolution.get('op')}) was in flight; re-run against "
-            "the new head"
-        ) from None
+    VersionedLog(table_dir).publish(manifest, vnew)
     return manifest
 
 
@@ -1046,51 +995,27 @@ class MorCdcSink:
 # gates didn't.
 # ---------------------------------------------------------------------------
 
-_BRANCH_NAME_RE = r"[A-Za-z][A-Za-z0-9_]*"
-
 # Main-chain manifests are matched by FULL name, never by prefix: a
 # branch named 'verify' stages 'manifest-verify-v3.json', which
-# startswith('manifest-v') — prefix matching would feed 'erify-v3' to
-# int() and make the whole table unlistable while any such branch has
-# staged commits (ADVICE r12).  Every listing site goes through
-# `main_manifest_versions` / `_latest_main_version` below.
-import re as _re_mod
-
-_MAIN_MANIFEST_RE = _re_mod.compile(r"manifest-v(\d+)\.json")
+# startswith('manifest-v') (ADVICE r12).  `VersionedLog.versions`
+# parses with a fullmatch, and every listing site goes through it.
 
 
 def main_manifest_versions(table_dir: str) -> list[int]:
-    """All main-chain manifest versions present on disk (ascending),
-    parsed with a fullmatch so WAP branch manifests of ANY legal
-    branch name — including ones starting with 'v' — never reach the
-    int() parse."""
-    if not os.path.isdir(table_dir):
-        return []
-    return sorted(
-        int(m.group(1))
-        for f in os.listdir(table_dir)
-        if (m := _MAIN_MANIFEST_RE.fullmatch(f))
-    )
-
-
-def _has_branch_manifests(table_dir: str) -> bool:
-    return any(
-        f.startswith("manifest-")
-        and f.endswith(".json")
-        and not _MAIN_MANIFEST_RE.fullmatch(f)
-        for f in os.listdir(table_dir)
-    )
+    """All main-chain manifest versions present on disk (ascending);
+    WAP branch manifests of ANY legal branch name never parse as main."""
+    return VersionedLog(table_dir).versions()
 
 
 def _check_branch_name(branch: str) -> None:
     import re
 
-    if not re.fullmatch(_BRANCH_NAME_RE, branch) or re.fullmatch(
+    if not re.fullmatch(BRANCH_NAME_RE, branch) or re.fullmatch(
         r"v\d+", branch
     ):
         raise ValueError(
             f"invalid branch name {branch!r}: must match "
-            f"{_BRANCH_NAME_RE} and not look like a version (v<digits>), "
+            f"{BRANCH_NAME_RE} and not look like a version (v<digits>), "
             "so branch manifests can never collide with main's"
         )
 
@@ -1114,32 +1039,18 @@ def _latest_main_version(table_dir: str) -> int:
     some instant — never a staged intermediate."""
     if not os.path.isdir(table_dir):
         return 0
+    log = VersionedLog(table_dir)
     names = os.listdir(table_dir)
-    vs = sorted(
-        int(mm.group(1))
-        for f in names
-        if (mm := _MAIN_MANIFEST_RE.fullmatch(f))
-    )
+    vs = log.versions(names)
     if not vs:
         return 0
-    has_branch = any(
-        f.startswith("manifest-")
-        and f.endswith(".json")
-        and not _MAIN_MANIFEST_RE.fullmatch(f)
-        for f in names
-    )
-    if not has_branch:
+    if not log.branches(names):
         return vs[-1]
     for v in reversed(vs):
-        with open(
-            os.path.join(table_dir, f"manifest-v{v}.json")
-        ) as f:
-            head = json.load(f).get("pending_head")
+        head = log.load(v).get("pending_head")
         if head is None:
             return v
-        if os.path.exists(
-            os.path.join(table_dir, f"manifest-v{int(head)}.json")
-        ):
+        if os.path.exists(log.path(head)):
             # the publish completed after our listing: its head is
             # the announced state, strictly newer than anything in
             # the (stale) snapshot
@@ -1148,12 +1059,7 @@ def _latest_main_version(table_dir: str) -> int:
 
 
 def _branch_versions(table_dir: str, branch: str) -> list[int]:
-    pre = f"manifest-{branch}-v"
-    return sorted(
-        int(f[len(pre):-len(".json")])
-        for f in os.listdir(table_dir)
-        if f.startswith(pre) and f.endswith(".json")
-    )
+    return VersionedLog(table_dir).branch(branch).versions()
 
 
 def wap_stage(
@@ -1166,8 +1072,8 @@ def wap_stage(
     published under the branch manifest name.  Main readers cannot
     see it; `wap_read` can."""
     _check_branch_name(branch)
-    staged = _branch_versions(table_dir, branch)
-    version = (staged[-1] if staged else _latest_main_version(table_dir)) + 1
+    staged = VersionedLog(table_dir).branch(branch).latest()
+    version = (staged or _latest_main_version(table_dir)) + 1
     return mor_cdc_commit(
         spark, batch, table_dir, version, n_files=n_files, branch=branch
     )
@@ -1185,17 +1091,13 @@ def wap_read(
     same manifest-level file skipping as main reads (staged entries
     carry klo/khi stats exactly like main ones — same commit path)."""
     _check_branch_name(branch)
-    staged = _branch_versions(table_dir, branch)
-    if not staged:
+    blog = VersionedLog(table_dir).branch(branch)
+    if not blog.latest():
         return mor_cdc_read(
             spark, table_dir, _latest_main_version(table_dir),
             zb_filter, key_range,
         )
-    with open(
-        os.path.join(table_dir, f"manifest-{branch}-v{staged[-1]}.json")
-    ) as f:
-        m = json.load(f)
-    return _read_manifest(spark, m, zb_filter, key_range)
+    return _read_manifest(spark, blog.load(), zb_filter, key_range)
 
 
 def wap_publish(table_dir: str, branch: str) -> dict:
@@ -1227,16 +1129,14 @@ def wap_publish(table_dir: str, branch: str) -> dict:
     `wap_discard` can still abandon it cleanly."""
 
     _check_branch_name(branch)
-    staged = _branch_versions(table_dir, branch)
+    main = VersionedLog(table_dir)
+    blog = main.branch(branch)
+    staged = blog.versions()
     if not staged:
         raise ValueError(
             f"branch {branch!r} of {table_dir} has nothing staged"
         )
-    first = os.path.join(
-        table_dir, f"manifest-{branch}-v{staged[0]}.json"
-    )
-    with open(first) as f:
-        base = json.load(f)["branch_base"]
+    base = blog.load(staged[0])["branch_base"]
     main_head = _latest_main_version(table_dir)
     if main_head != base:
         raise CommitConflictError(
@@ -1246,21 +1146,17 @@ def wap_publish(table_dir: str, branch: str) -> dict:
     head = staged[-1]
     published: list[int] = []
     for v in staged:
-        bpath = os.path.join(table_dir, f"manifest-{branch}-v{v}.json")
-        with open(bpath) as f:
-            m = json.load(f)
+        m = blog.load(v)
         m.pop("branch", None)
         m.pop("branch_base", None)
         if v != head:
             # invisible to the reader-head rule until the head lands
             m["pending_head"] = head
             m["pending_branch"] = branch
-        mpath = os.path.join(table_dir, f"manifest-v{v}.json")
         try:
-            _scans.atomic_json_publish_once(m, mpath)
-        except FileExistsError:
-            with open(mpath) as f:
-                existing = json.load(f)
+            main.publish(m, v)
+        except CommitConflictError:
+            existing = main.load(v)
             if (
                 existing.get("pending_branch") == branch
                 or existing == m
@@ -1279,9 +1175,8 @@ def wap_publish(table_dir: str, branch: str) -> dict:
     # head is live: readers flipped base -> head in that one link(2).
     # Only now consume the branch manifests (crash-resume anchor).
     for v in staged:
-        bpath = os.path.join(table_dir, f"manifest-{branch}-v{v}.json")
         try:
-            os.unlink(bpath)
+            os.unlink(blog.path(v))
         except FileNotFoundError:
             pass  # a concurrent resume of the same publish beat us
     return {"branch": branch, "published": published, "head": head}
@@ -1303,35 +1198,32 @@ def wap_discard(table_dir: str, branch: str) -> dict:
     import shutil
 
     _check_branch_name(branch)
+    main = VersionedLog(table_dir)
+    blog = main.branch(branch)
     # unlink this branch's headless mid-publish intermediates FIRST:
     # once the branch manifests are gone the fast-path head rule would
     # otherwise resolve one of them as latest (an unaudited state)
-    for v in main_manifest_versions(table_dir):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        with open(mp) as f:
-            m = json.load(f)
+    for v in main.versions():
+        m = main.load(v)
         if m.get("pending_branch") == branch and not os.path.exists(
-            os.path.join(table_dir, f"manifest-v{m['pending_head']}.json")
+            main.path(m["pending_head"])
         ):
-            os.unlink(mp)
+            os.unlink(main.path(v))
     main_reachable: set[str] = set()
-    for v in range(1, _latest_main_version(table_dir) + 1):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        if not os.path.exists(mp):
-            continue  # vacuumed-away history
-        with open(mp) as f:
-            m = json.load(f)
+    head = _latest_main_version(table_dir)
+    for v in main.versions():  # vacuumed-away history is skipped
+        if v > head:
+            break
+        m = main.load(v)
         for entries in m["files"].values():
             main_reachable.update(
                 os.path.dirname(e["path"]) for e in entries
             )
         main_reachable.update(d["path"] for d in m["dvs"])
-    staged = _branch_versions(table_dir, branch)
+    staged = blog.versions()
     removed: set[str] = set()
     for v in staged:
-        bpath = os.path.join(table_dir, f"manifest-{branch}-v{v}.json")
-        with open(bpath) as f:
-            m = json.load(f)
+        m = blog.load(v)
         base = m["branch_base"]
         for entries in m["files"].values():
             for e in entries:
@@ -1340,7 +1232,7 @@ def wap_discard(table_dir: str, branch: str) -> dict:
         for d in m["dvs"]:
             if int(d["v"]) > base:
                 removed.add(d["path"])
-        os.unlink(bpath)
+        os.unlink(blog.path(v))
     removed -= main_reachable
     for path in sorted(removed):
         shutil.rmtree(path, ignore_errors=True)
@@ -1449,7 +1341,7 @@ def stream_mor_cdc_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("op", F.lit("u"))
         )
         if not os.path.exists(
-            os.path.join(table_dir, "manifest-v1.json")
+            VersionedLog(table_dir).path(1)
         ):
             mor_cdc_init(
                 spark, d.withColumn("version", F.lit(0)), table_dir,
@@ -1576,7 +1468,7 @@ def stream_mor_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     final = len(_doc_waves(d)) + 1
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
+        VersionedLog(table_dir).path(final)
     ):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
@@ -1648,8 +1540,7 @@ def stream_mor_cdc_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py via inputFiles)."""
     stream_mor_cdc(spark, sf_dir)  # build-if-missing the shared table
     table_dir = scratch_dir("mor_cdc", sf_dir)
-    with open(os.path.join(table_dir, "manifest-v4.json")) as f:
-        lo, hi = json.load(f)["bounds"]
+    lo, hi = VersionedLog(table_dir).load(4)["bounds"]
     span = int(hi) - int(lo) + 1
     key_range = (int(lo) + span // 4, int(lo) + span // 2)
     return mor_cdc_read(
@@ -1697,10 +1588,7 @@ def mor_cdc_compact(
     import shutil
     import uuid
 
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(version)
     key = m["key"]
     live = mor_cdc_read(spark, table_dir, version)
     if n_files is None:
@@ -1850,29 +1738,20 @@ def mor_cdc_compact(
         }
 
     try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
+        VersionedLog(table_dir).publish(manifest, vnew)
+    except CommitConflictError:
         # lost the maintenance CAS: remove OUR staged dirs (writer-
         # unique, so this touches no winner artifacts), then either
         # adopt an equivalent winner or surface the named conflict
         shutil.rmtree(vdir, ignore_errors=True)
         if floor_path is not None:
             shutil.rmtree(floor_path, ignore_errors=True)
-        with open(
-            os.path.join(table_dir, f"manifest-v{vnew}.json")
-        ) as f:
-            winner = json.load(f)
+        winner = VersionedLog(table_dir).load(vnew)
         if winner.get("compacted_from") == version and int(
             winner.get("n_files", -1)
         ) == int(n_files):
             return winner  # an equivalent compaction won the race
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this compaction was in flight; "
-            "re-run against the new head"
-        ) from None
+        raise
     return manifest
 
 
@@ -1953,18 +1832,15 @@ def stream_mor_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     final = len(_doc_waves(d)) + 1
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
+        VersionedLog(table_dir).path(final)
     ):
         stream_mor_cdc(spark, sf_dir).collect()
     vnew = final + 1
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{vnew}.json")
+        VersionedLog(table_dir).path(vnew)
     ):
         mor_cdc_compact(spark, table_dir, final)
-    with open(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ) as f:
-        m_old = json.load(f)
+    m_old = VersionedLog(table_dir).load(final)
     files_before = spark.createDataFrame(
         [(int(z), len(entries)) for z, entries in m_old["files"].items()],
         "zb bigint, n_files_before bigint",
@@ -1975,10 +1851,7 @@ def stream_mor_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv_rows = dv.groupBy(F.col("zb").cast("bigint").alias("zb")).agg(
         F.count("*").cast("bigint").alias("dv_rows_frozen")
     )
-    with open(
-        os.path.join(table_dir, f"manifest-v{vnew}.json")
-    ) as f:
-        m_new = json.load(f)
+    m_new = VersionedLog(table_dir).load(vnew)
     from ..sources.zonemap import _grouped_manifest_scan
 
     out = _grouped_manifest_scan(
@@ -2088,7 +1961,7 @@ def stream_mor_cdc_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     waves = _evolve_waves(d)
     final = len(waves) + 1
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
+        VersionedLog(table_dir).path(final)
     ):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
@@ -2169,7 +2042,7 @@ def _rename_lifecycle(spark: SparkSession, sf_dir: str) -> str:
         "doc_id", "lang", F.col("n_chars").cast("int").alias("n_chars")
     )
     if not os.path.exists(
-        os.path.join(table_dir, "manifest-v7.json")
+        VersionedLog(table_dir).path(7)
     ):
         # rerun-safe (the src_cow_rename rule, ADVICE r14): the
         # rename/widen/drop steps resolve the CURRENT head, so a
@@ -2267,7 +2140,7 @@ def stream_mor_cdc_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("n_chars").cast("int").alias("n_chars")
     )
     if not os.path.exists(
-        os.path.join(table_dir, "manifest-v6.json")
+        VersionedLog(table_dir).path(6)
     ):
         # rerun-safe (the src_cow_readd rule): a crash mid-chain
         # leaves a head whose schema already carries flag/quality, so
@@ -2450,7 +2323,7 @@ def stream_mor_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     waves = _doc_waves(d)
     final = len(waves) + 2  # +1 base, +1 compaction
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
+        VersionedLog(table_dir).path(final)
     ):
         mor_cdc_init(
             spark, d.withColumn("version", F.lit(0)), table_dir,
@@ -2462,16 +2335,12 @@ def stream_mor_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, table_dir, 3, n_files=MOR_CDC_FILES * 2
         )
         mor_cdc_commit(spark, waves[2], table_dir, 5)
-    with open(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ) as f:
-        m = json.load(f)
+    m = VersionedLog(table_dir).load(final)
     # occupied-bucket count from the compaction's MANIFEST (one entry
     # per occupied bucket) — paths derive from manifests, never from
     # version arithmetic (the compaction stages under a writer-unique
     # v4-{token} name since the r14 maintenance CAS)
-    with open(os.path.join(table_dir, "manifest-v4.json")) as f:
-        n_dirs = len(json.load(f)["files"])
+    n_dirs = len(VersionedLog(table_dir).load(4)["files"])
     return mor_cdc_read(spark, table_dir, final).select(
         "doc_id",
         "lang",
@@ -2506,31 +2375,19 @@ def mor_cdc_vacuum(
     too: an unpublished branch's staged directories must survive a
     concurrent vacuum (discarding a branch is `wap_discard`'s job,
     never vacuum's)."""
-    import re as _re
-    import shutil
-
-    if retain < 1:
-        # retain=0 would reclaim the head manifest itself, bricking
-        # every read (the catalog_vacuum rule, ADVICE r12)
-        raise ValueError(f"retain must be >= 1, got {retain}")
-    if floor is not None:
-        # keep every version a retained catalog snapshot references
-        retain = max(retain, latest - int(floor) + 1)
+    log = VersionedLog(table_dir)
+    # retain=0 would reclaim the head manifest itself, bricking every
+    # read (the catalog_vacuum rule, ADVICE r12): expire raises on it;
+    # `floor` keeps every version a retained catalog snapshot references
+    log.expire(retain, floor, head=latest)
+    roots = [log.load(v) for v in log.versions() if v <= latest] + [
+        b.load(v)
+        for b in map(log.branch, log.branches())
+        for v in b.versions()
+    ]
     reachable_data: set[str] = set()
     reachable_dv: set[str] = set()
-    roots = [
-        os.path.join(table_dir, f"manifest-v{v}.json")
-        for v in range(latest - retain + 1, latest + 1)
-    ] + [
-        os.path.join(table_dir, f)
-        for f in os.listdir(table_dir)
-        if f.startswith("manifest-")
-        and f.endswith(".json")
-        and not _re.fullmatch(r"manifest-v\d+\.json", f)
-    ]
-    for mp in roots:
-        with open(mp) as f:
-            m = json.load(f)
+    for m in roots:
         for entries in m["files"].values():
             reachable_data.update(e["path"] for e in entries)
         reachable_dv.update(d["path"] for d in m["dvs"])
@@ -2539,44 +2396,17 @@ def mor_cdc_vacuum(
             # arbitrarily-late redelivery — reachable as long as any
             # retained manifest names it (see mor_cdc_compact)
             reachable_dv.add(m["dv_floor"])
-    # Staged dirs targeting a version NEWER than `latest` are never
-    # collected: a concurrent commit/compaction stages its
-    # v{N}-{token} / dv-v{N}-{token} artifacts BEFORE its manifest
-    # CAS, and sweeping them in that window would let the writer's
-    # subsequent successful publish reference deleted paths —
-    # committed-data loss.  A crashed writer's head+1 orphan is still
-    # reclaimed one successful commit later, once the head passes it.
-    present_data = {
-        os.path.join(table_dir, vd, zd)
-        for vd in os.listdir(table_dir)
-        if (vm := _re.fullmatch(r"v(\d+)(?:-[0-9a-f]+)?", vd))
-        and int(vm.group(1)) <= latest
-        and os.path.isdir(os.path.join(table_dir, vd))
-        for zd in os.listdir(os.path.join(table_dir, vd))
-        if zd.startswith("zb=")
-    }
-    present_dv = {
-        os.path.join(table_dir, d)
-        for d in os.listdir(table_dir)
-        if (dm := _re.fullmatch(
-            r"dv-(?:floor-)?v(\d+)(?:-[0-9a-f]+)?", d
-        ))
-        and int(dm.group(1)) <= latest
-        and os.path.isdir(os.path.join(table_dir, d))
-    }
-    rm_data = sorted(present_data - reachable_data)
-    rm_dv = sorted(present_dv - reachable_dv)
-    for path in rm_data + rm_dv:
-        shutil.rmtree(path)
-    for v in range(1, latest - retain + 1):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        if os.path.exists(mp):
-            os.remove(mp)
+    # staged dirs targeting a version newer than `latest` are never
+    # collected (an in-flight commit/compaction stages before its CAS)
+    present, removed = sweep(
+        table_dir, reachable_data, latest, DATA_DIR_RE, "zb="
+    )
+    _, removed_dv = sweep(table_dir, reachable_dv, latest, DV_DIR_RE)
     return {
-        "dirs_before": len(present_data),
-        "dirs_removed": len(rm_data),
-        "dirs_after": len(present_data) - len(rm_data),
-        "dv_dirs_removed": len(rm_dv),
+        "dirs_before": present,
+        "dirs_removed": removed,
+        "dirs_after": present - removed,
+        "dv_dirs_removed": removed_dv,
     }
 
 
@@ -2656,17 +2486,16 @@ def stream_mor_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     waves = _doc_waves(d)
     final = len(waves) + 1
-    record = os.path.join(table_dir, f"vacuum-v{final + 1}.json")
-    if not os.path.exists(record):
+    record = VersionedLog(table_dir, "vacuum")
+    if not os.path.exists(record.path(final + 1)):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         for i, wave in enumerate(waves):
             mor_cdc_commit(spark, wave, table_dir, 2 + i)
         mor_cdc_compact(spark, table_dir, final)
         stats = mor_cdc_vacuum(table_dir, latest=final + 1)
-        atomic_json_dump(stats, record)
-    with open(record) as f:
-        stats = json.load(f)
+        record.write(stats, final + 1)
+    stats = record.load(final + 1)
     return (
         mor_cdc_read(spark, table_dir, final + 1)
         .agg(
@@ -2686,134 +2515,8 @@ def stream_mor_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _feed_dv_context(
-    spark: SparkSession, table_dir: str, versions: list[int]
-) -> dict[int, tuple[DataFrame, set[str]]]:
-    """Derive every requested commit's ceiling-filtered DV aggregate
-    and churned-bucket set in ONE Spark action.
-
-    `mor_cdc_change_feed` needs, per commit N: (a) the keys whose max
-    change version in N's sidecar exceeds their shadow ceiling across
-    N's manifest-listed PRIOR sidecars + compaction floor (with that
-    max as `_dv_v`), and (b) the distinct churned buckets N's sidecar
-    names.  Both are O(commit churn) — the feed already collects the
-    bucket set and broadcasts the key table — so deriving them per
-    commit cost 2-3 eager jobs each (sidecar localCheckpoint, bucket
-    collect, ceiling checkpoint re-scanning every prior sidecar): a
-    span of C commits paid O(C²) sidecar file reads across ~3C driver
-    round-trips.  Here ALL sidecars a span touches are read once in
-    one unioned, schema-pinned scan, aggregated per (source, key), and
-    collected in a single job; the per-commit ceiling rule — exactly
-    the relational one, per-commit manifest prior lists respected —
-    folds over the collected rows on the driver, and each commit's
-    key table comes back as a broadcast-ready local relation.  Scale
-    shape unchanged: what crosses the driver is the same churn-sized
-    metadata the per-commit plan already collected and broadcast.
-
-    Versions whose manifest is missing, whose feed the compaction/
-    evolution rule makes empty, or whose artifacts were vacuumed are
-    SKIPPED (no dict entry): `mor_cdc_change_feed` owns those branches
-    and their error messages."""
-    from pyspark.sql import types as T
-
-    per_version: dict[int, dict] = {}
-    sources: dict[str, int] = {}  # path -> source id
-
-    def _src(path: str) -> int:
-        return sources.setdefault(path, len(sources))
-
-    for version in versions:
-        mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-        prev_mpath = os.path.join(
-            table_dir, f"manifest-v{version - 1}.json"
-        )
-        if not os.path.exists(mpath):
-            continue
-        with open(mpath) as f:
-            m = json.load(f)
-        dv_dir = next(
-            (d["path"] for d in m["dvs"] if int(d["v"]) == version),
-            os.path.join(table_dir, f"dv-v{version}"),
-        )
-        if (
-            m.get("compacted_from") is not None or m.get("evolution")
-        ) and not os.path.isdir(dv_dir):
-            continue  # empty feed by definition
-        if not (os.path.exists(prev_mpath) and os.path.isdir(dv_dir)):
-            continue  # retention error; change_feed raises it
-        prior_ids = [
-            _src(d["path"])
-            for d in m["dvs"]
-            if int(d["v"]) < version
-        ]
-        if m.get("dv_floor"):
-            prior_ids.append(_src("parquet:" + m["dv_floor"]))
-        per_version[version] = {
-            "key": m["key"],
-            "cur": _src(dv_dir),
-            "prior": set(prior_ids),
-        }
-    out: dict[int, tuple[DataFrame, set[str]]] = {}
-    if not per_version:
-        return out
-    # ONE unioned scan over every distinct source, aggregated per
-    # (source, key): max change version + the bucket the key routes to
-    # (functionally dependent on the key — the frozen-bounds rule).
-    scan = None
-    for path, sid in sources.items():
-        if path.startswith("parquet:"):
-            piece = spark.read.parquet(path[len("parquet:"):]).select(
-                F.lit(sid).alias("_src"),
-                "k",
-                F.col("v").cast("long").alias("v"),
-                F.lit(None).cast("long").alias("zb"),
-            )
-        else:
-            piece = spark.read.schema(DV_SIDECAR_SCHEMA).json(path).select(
-                F.lit(sid).alias("_src"),
-                "k",
-                F.col("v").cast("long").alias("v"),
-                F.col("zb").cast("long").alias("zb"),
-            )
-        scan = piece if scan is None else scan.unionByName(piece)
-    rows = (
-        scan.groupBy("_src", "k")
-        .agg(F.max("v").alias("v"), F.first("zb").alias("zb"))
-        .collect()
-    )
-    by_src: dict[int, dict] = {}
-    for r in rows:
-        by_src.setdefault(r["_src"], {})[r["k"]] = (r["v"], r["zb"])
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("_dv_v", T.LongType()),
-        ]
-    )
-    for version, info in per_version.items():
-        cur = by_src.get(info["cur"], {})
-        churned = {str(zb) for _v, zb in cur.values()}
-        keep = []
-        for k, (v, _zb) in cur.items():
-            prior_v = None
-            for sid in info["prior"]:
-                pv = by_src.get(sid, {}).get(k)
-                if pv is not None and (
-                    prior_v is None or pv[0] > prior_v
-                ):
-                    prior_v = pv[0]
-            if prior_v is None or v > prior_v:
-                keep.append((k, v))
-        dv_agg = spark.createDataFrame(
-            keep, schema=schema
-        ).withColumnRenamed("k", info["key"])
-        out[version] = (dv_agg, churned)
-    return out
-
-
 def mor_cdc_change_feed(
-    spark: SparkSession, table_dir: str, version: int,
-    _ctx: dict[int, tuple[DataFrame, set[str]]] | None = None,
+    spark: SparkSession, table_dir: str, version: int
 ) -> DataFrame:
     """Row-level change feed of commit `version` (v{N-1} → v{N}):
     insert / update / delete rows with pre- and post-images, derived
@@ -2859,17 +2562,15 @@ def mor_cdc_change_feed(
     the table never made, corrupting any downstream -pre/+post fold;
     pinned by the redelivery leg of
     tests/test_properties.py::test_mor_cdc_feed_reconstructs_history."""
-    mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-    prev_mpath = os.path.join(table_dir, f"manifest-v{version - 1}.json")
-    if not os.path.exists(mpath):
+    log = VersionedLog(table_dir)
+    if not os.path.exists(log.path(version)):
         raise ChangeFeedRetentionError(
             f"change feed requested for commit v{version} of "
             f"{table_dir}, but its manifest is not retained (vacuumed "
             "or never committed); feeds are readable only within the "
             "retained window"
         )
-    with open(mpath) as f:
-        m = json.load(f)
+    m = log.load(version)
     key = m["key"]
     # this commit's DV sidecar, located through the MANIFEST (an
     # exclusive commit's sidecar carries a writer-unique suffix, so
@@ -2901,29 +2602,84 @@ def mor_cdc_change_feed(
                 )
             ],
         )
-    if not (os.path.exists(prev_mpath) and os.path.isdir(dv_dir)):
+    if not (os.path.exists(log.path(version - 1)) and os.path.isdir(dv_dir)):
         raise ChangeFeedRetentionError(
             f"change feed requested for commit v{version} of "
             f"{table_dir}, but its pre-image manifest "
             f"(v{version - 1}) or DV sidecar was reclaimed by vacuum; "
             "feeds are readable only within the retained window"
         )
-    # The ceiling-filtered key table (stale-redelivery safety: a key
-    # participates in commit N's feed only if its max change version
-    # HERE exceeds its max across all EARLIER sidecars and the
-    # compaction floor — see _feed_dv_context) and the churned-bucket
-    # set both come from the context: ONE aggregate+collect job over
-    # one unioned sidecar scan, shared by every commit of a span,
-    # instead of the 2-3 eager jobs (sidecar checkpoint, bucket
-    # collect, ceiling checkpoint re-reading every prior sidecar)
-    # this block previously ran per commit.  dv_agg arrives as a
-    # churn-sized LOCAL relation — the same rows the old plan
-    # collected for broadcast — so the feed plan below is unchanged
-    # except its build sides are ExistingRDDs, not sidecar re-scans.
-    if _ctx is None or version not in _ctx:
-        _ctx = _feed_dv_context(spark, table_dir, [version])
-    dv_agg, churned = _ctx[version]
-    ckpts: list[DataFrame] = []
+    # the sidecar is O(commit churn) and feeds THREE subtrees (post
+    # filter, pre-image semi-join, ceiling check) — materialize once
+    # instead of re-scanning the JSON per consumer (plan audit r11:
+    # 7 json scans -> 1)
+    dv_raw = (
+        spark.read.schema(DV_SIDECAR_SCHEMA)
+        .json(dv_dir)
+        .localCheckpoint(eager=True)
+    )
+    ckpts = [dv_raw]
+    dv_agg = (
+        dv_raw.groupBy(F.col("k").alias(key))
+        .agg(F.max("v").cast("long").alias("_dv_v"))
+    )
+    # Stale-redelivery safety: a wave re-committed under a NEW epoch
+    # id (past the ledger) leaves the TABLE unchanged — its changes
+    # are at-or-below the key's existing shadow ceiling, and the read
+    # rule keeps the older winners (module doc) — so its change feed
+    # must be EMPTY for those keys, not a pre→stale-value transition
+    # the table never made (which would corrupt any -pre/+post fold).
+    # A key participates in commit N's feed only if its max change
+    # version HERE exceeds its max across all EARLIER sidecars and
+    # the compaction floor (equal version = redelivery by the CDC
+    # log-position contract: a version names one deterministic
+    # change, so a re-commit of it is never a new logical change).
+    prior = None
+    prior_paths = [
+        d["path"] for d in m["dvs"] if int(d["v"]) < version
+    ]
+    if prior_paths:
+        # one multi-path scan, one schema inference — not a union per
+        # sidecar (the sidecars share a schema by construction)
+        prior = spark.read.schema(DV_SIDECAR_SCHEMA).json(
+            prior_paths
+        ).select("k", F.col("v").cast("long").alias("v"))
+    if m.get("dv_floor"):
+        piece = spark.read.parquet(m["dv_floor"]).select(
+            "k", F.col("v").cast("long").alias("v")
+        )
+        prior = piece if prior is None else prior.unionByName(piece)
+    if prior is not None:
+        # restrict the history scan to THIS commit's keys first (the
+        # broadcast key list bounds it at O(commit churn)), then
+        # aggregate — both sides of the ceiling join stay churn-sized
+        prior_max = (
+            prior.join(
+                F.broadcast(dv_agg.select(F.col(key).alias("k"))),
+                "k",
+                "left_semi",
+            )
+            .groupBy(F.col("k").alias(key))
+            .agg(F.max("v").alias("_prior_v"))
+        )
+        dv_agg = (
+            dv_agg.join(F.broadcast(prior_max), key, "left")
+            .filter(
+                F.col("_prior_v").isNull()
+                | (F.col("_dv_v") > F.col("_prior_v"))
+            )
+            .drop("_prior_v")
+            # ceiling-filtered keys also feed three subtrees: freeze
+            # them so the prior-sidecar scan runs once per feed
+            .localCheckpoint(eager=True)
+        )
+        ckpts.append(dv_agg)
+    # the churned-bucket set: recorded per change key at commit time
+    # (mor_cdc_commit routes once and the sidecar carries zb), bounded
+    # by the bucket fan-out — a metadata-scale collect
+    churned = {
+        str(r["zb"]) for r in dv_raw.select("zb").distinct().collect()
+    }
     post_paths = [
         e["path"]
         for entries in m["files"].values()
@@ -2953,8 +2709,7 @@ def mor_cdc_change_feed(
         # and types CURRENT AT v{N-1}; map them to THIS commit's
         # schema by field id (rename) and cast (widen), so pre/post
         # images line up even when the evolution sits between them
-        with open(prev_mpath) as f:
-            prev_m = json.load(f)
+        prev_m = log.load(version - 1)
         prev_names = {
             f["id"]: f["name"] for f in prev_m.get("schema", [])
         }
@@ -3056,28 +2811,16 @@ def mor_cdc_change_feed_span(
 
     Retention composes per commit: any vacuumed feed in the span
     raises the lane's named `ChangeFeedRetentionError`."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{to_version}.json")
-    ) as f:
-        m_to = json.load(f)
+    m_to = VersionedLog(table_dir).load(to_version)
     schema_to = m_to.get("schema")
     key_to = m_to["key"]
     ckpts = []
     out = None
-    span_versions = list(
-        range(int(from_version) + 1, int(to_version) + 1)
-    )
-    # one aggregate+collect over every sidecar the span touches (see
-    # _feed_dv_context) instead of 2-3 eager jobs per commit
-    ctx = _feed_dv_context(spark, table_dir, span_versions)
-    for v in span_versions:
-        feed = mor_cdc_change_feed(spark, table_dir, v, _ctx=ctx)
+    for v in range(int(from_version) + 1, int(to_version) + 1):
+        feed = mor_cdc_change_feed(spark, table_dir, v)
         ckpts += getattr(feed, "_ckpt_intermediates", [])
         if schema_to is not None:
-            with open(
-                os.path.join(table_dir, f"manifest-v{v}.json")
-            ) as f:
-                m_v = json.load(f)
+            m_v = VersionedLog(table_dir).load(v)
             names_v = {
                 fld["id"]: fld["name"]
                 for fld in m_v.get("schema", [])
@@ -3174,13 +2917,12 @@ def stream_mor_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     final = len(_doc_waves(d)) + 1
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
+        VersionedLog(table_dir).path(final)
     ):
         stream_mor_cdc(spark, sf_dir).collect()
     out = None
-    ctx = _feed_dv_context(spark, table_dir, list(range(2, final + 1)))
     for v in range(2, final + 1):
-        piece = mor_cdc_change_feed(spark, table_dir, v, _ctx=ctx)
+        piece = mor_cdc_change_feed(spark, table_dir, v)
         out = piece if out is None else out.unionByName(piece)
     return out.select(
         "commit",
@@ -3244,7 +2986,7 @@ def ivm_stream_feed_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     final = len(_doc_waves(d)) + 1
     if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
+        VersionedLog(table_dir).path(final)
     ):
         stream_mor_cdc(spark, sf_dir).collect()
     view1 = (
@@ -3256,9 +2998,8 @@ def ivm_stream_feed_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     feed = None
-    ctx = _feed_dv_context(spark, table_dir, list(range(2, final + 1)))
     for v in range(2, final + 1):
-        piece = mor_cdc_change_feed(spark, table_dir, v, _ctx=ctx)
+        piece = mor_cdc_change_feed(spark, table_dir, v)
         feed = piece if feed is None else feed.unionByName(piece)
     contrib = (
         feed.filter(F.col("pre_n_chars").isNotNull())

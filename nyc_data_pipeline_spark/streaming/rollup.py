@@ -111,8 +111,9 @@ def compact_rollup(spark: SparkSession, base_path: str) -> int:
     production, compact only epochs at or below the checkpoint's
     committed offset — an uncommitted epoch merged here and then
     replayed would double count.  Returns #epoch dirs compacted."""
-    import json
     import shutil
+
+    from ..sources.scans import atomic_json_dump
 
     _recover_compaction(base_path)
     epochs = [
@@ -150,10 +151,7 @@ def compact_rollup(spark: SparkSession, base_path: str) -> int:
     merged.write.mode("overwrite").parquet(tmp_dir)
     # Commit point: manifest install is a single atomic rename.
     manifest = os.path.join(base_path, "_compact_manifest.json")
-    manifest_tmp = manifest + ".tmp"
-    with open(manifest_tmp, "w") as f:
-        json.dump({"sources": sources}, f)
-    os.rename(manifest_tmp, manifest)
+    atomic_json_dump({"sources": sources}, manifest)
     for p in paths:
         shutil.rmtree(p)
     if os.path.exists(compact_dir):

@@ -57,31 +57,12 @@ in); this module is the missing consistency layer between them.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.scans import atomic_json_publish_once
-from .mor_cdc import CommitConflictError, mor_cdc_read
-
-
-def _catalog_path(catalog_dir: str, version: int) -> str:
-    return os.path.join(catalog_dir, f"catalog-v{version}.json")
-
-
-def catalog_latest(catalog_dir: str) -> int:
-    """Highest published catalog version (0 when none)."""
-    if not os.path.isdir(catalog_dir):
-        return 0
-    return max(
-        (
-            int(f[len("catalog-v"):-len(".json")])
-            for f in os.listdir(catalog_dir)
-            if f.startswith("catalog-v") and f.endswith(".json")
-        ),
-        default=0,
-    )
+from ..sources.vlog import CommitConflictError, VersionedLog
+from .mor_cdc import mor_cdc_read
 
 
 class CatalogRetentionError(RuntimeError):
@@ -91,24 +72,20 @@ class CatalogRetentionError(RuntimeError):
     TimeTravelRetentionError rule applied to the catalog chain)."""
 
 
+def _catalog_log(catalog_dir: str) -> VersionedLog:
+    return VersionedLog(catalog_dir, "catalog", CatalogRetentionError)
+
+
+def catalog_latest(catalog_dir: str) -> int:
+    """Highest published catalog version (0 when none)."""
+    return _catalog_log(catalog_dir).latest()
+
+
 def catalog_load(catalog_dir: str, version: int | None = None) -> dict:
     """Load one catalog version (latest when None).  A version the
     catalog never had is a ValueError; one reclaimed by
     `catalog_vacuum` is the named `CatalogRetentionError`."""
-    latest = catalog_latest(catalog_dir)
-    if version is None:
-        version = latest
-    if version < 1 or version > latest:
-        raise ValueError(f"catalog {catalog_dir} has no version {version}")
-    path = _catalog_path(catalog_dir, version)
-    if not os.path.exists(path):
-        raise CatalogRetentionError(
-            f"catalog version {version} of {catalog_dir} was vacuumed "
-            f"(retained floor is higher); earliest retained snapshot "
-            "is the oldest remaining catalog-v*.json"
-        )
-    with open(path) as f:
-        return json.load(f)
+    return _catalog_log(catalog_dir).load(version)
 
 
 def catalog_load_as_of(catalog_dir: str, ts_us: int) -> dict:
@@ -118,10 +95,8 @@ def catalog_load_as_of(catalog_dir: str, ts_us: int) -> dict:
     version that was visible AT THAT INSTANT, giving a historically
     consistent multi-table snapshot no per-table resolution could
     reconstruct."""
-    from ..sources.timetravel import resolve_version_as_of
-
-    v = resolve_version_as_of(catalog_dir, ts_us, prefix="catalog-v")
-    return catalog_load(catalog_dir, v)
+    log = _catalog_log(catalog_dir)
+    return log.load(log.as_of(ts_us))
 
 
 def catalog_vacuum(catalog_dir: str, retain: int = 1) -> dict:
@@ -129,19 +104,9 @@ def catalog_vacuum(catalog_dir: str, retain: int = 1) -> dict:
     pointer FILES are reclaimed here — table data reclaim stays with
     each table's own vacuum, which must respect
     `catalog_table_floor` so retained snapshots keep resolving."""
-    if retain < 1:
-        # retain=0 would delete the NEWEST catalog version too,
-        # permanently bricking catalog_load/txn_commit (ADVICE r12)
-        raise ValueError(f"retain must be >= 1, got {retain}")
-    latest = catalog_latest(catalog_dir)
-    removed = []
-    for v in range(1, latest - retain + 1):
-        p = _catalog_path(catalog_dir, v)
-        if os.path.exists(p):
-            os.remove(p)
-            removed.append(v)
-    return {"retained": list(range(max(1, latest - retain + 1), latest + 1)),
-            "removed": removed}
+    log = _catalog_log(catalog_dir)
+    removed = log.expire(retain)  # retain < 1 raises (ADVICE r12)
+    return {"retained": log.versions(), "removed": removed}
 
 
 def catalog_table_floor(catalog_dir: str, table: str) -> int:
@@ -149,18 +114,13 @@ def catalog_table_floor(catalog_dir: str, table: str) -> int:
     version references — the floor a per-table vacuum must keep so
     every retained cross-table snapshot stays readable (pass
     `retain >= table_latest - floor + 1` to that table's vacuum)."""
-    latest = catalog_latest(catalog_dir)
-    floor = None
-    for v in range(1, latest + 1):
-        p = _catalog_path(catalog_dir, v)
-        if not os.path.exists(p):
-            continue
-        with open(p) as f:
-            tv = json.load(f)["tables"][table]["version"]
-        floor = tv if floor is None else min(floor, tv)
-    if floor is None:
+    log = _catalog_log(catalog_dir)
+    versions = log.versions()
+    if not versions:
         raise ValueError(f"catalog {catalog_dir} has no retained versions")
-    return floor
+    return min(
+        log.load(v)["tables"][table]["version"] for v in versions
+    )
 
 
 def txn_vacuum(
@@ -235,12 +195,10 @@ def _infer_member_kind(tdir: str, version: int) -> str:
       ivfpq-manifest-v{N}) — reclaim stays with the lane's
       swap/rebuild lifecycle
     """
-    p = os.path.join(tdir, f"manifest-v{int(version)}.json")
-    if not os.path.exists(p):
+    log = VersionedLog(tdir)
+    if not os.path.exists(log.path(version)):
         return "artifact"
-    with open(p) as f:
-        m = json.load(f)
-    return "table" if "files" in m else "view"
+    return "table" if "files" in log.load(version) else "view"
 
 
 def txn_catalog_init(
@@ -270,7 +228,7 @@ def txn_catalog_init(
         "tables": members,
         "committed_at_us": commit_wallclock_us(None),
     }
-    atomic_json_publish_once(cat, _catalog_path(catalog_dir, 1))
+    _catalog_log(catalog_dir).publish(cat, 1)
     return cat
 
 
@@ -341,11 +299,9 @@ def txn_commit(
             _before_publish()
             _before_publish = None
         try:
-            atomic_json_publish_once(
-                new, _catalog_path(catalog_dir, latest + 1)
-            )
+            _catalog_log(catalog_dir).publish(new, latest + 1)
             return new
-        except FileExistsError:
+        except CommitConflictError:
             # lost the CAS: validate our updates against the mover
             fresh = catalog_load(catalog_dir)
             for name, v in updates.items():
@@ -510,16 +466,12 @@ def _register_txn_query():
         o_dir = scratch_dir("txn_orders", sf_dir)
         c_dir = scratch_dir("txn_cust", sf_dir)
         if catalog_latest(cat_dir) < 2:
-            if not os.path.exists(
-                os.path.join(o_dir, "manifest-v1.json")
-            ):
+            if VersionedLog(o_dir).latest() < 1:
                 mor_cdc_init(
                     spark, o.withColumn("version", F.lit(0)), o_dir,
                     "o_orderkey",
                 )
-            if not os.path.exists(
-                os.path.join(c_dir, "manifest-v1.json")
-            ):
+            if VersionedLog(c_dir).latest() < 1:
                 mor_cdc_init(
                     spark, c.withColumn("version", F.lit(0)), c_dir,
                     "c_custkey",

@@ -680,6 +680,38 @@ def test_view_vacuum_retains_latest_and_raises_past_floor(
     assert (m2["a_version"], m2["b_version"]) == (5, 3)
 
 
+def test_view_vacuum_spares_inflight_refresh(tmp_path):
+    """A catch-up writes `v{head+1}/seg_view` and `cust_view` BEFORE it
+    publishes `manifest-v{head+1}`; a view_vacuum landing between the
+    two must leave the staged pair alone, or the publish that follows
+    points at nothing.  Unreferenced refreshes at or below the head
+    are still reclaimed."""
+    import json as _json
+    import os as _os
+
+    from nyc_data_pipeline_spark.operators.incremental import view_vacuum
+
+    view_dir = str(tmp_path / "view")
+    for v in (1, 2, 3):  # v3 = the in-flight refresh (head is v2)
+        for k in ("seg_view", "cust_view"):
+            _os.makedirs(_os.path.join(view_dir, f"v{v}", k))
+    for v in (1, 2):
+        m = {
+            "version": v,
+            "seg_view": _os.path.join(view_dir, f"v{v}", "seg_view"),
+            "cust_view": _os.path.join(view_dir, f"v{v}", "cust_view"),
+        }
+        with open(_os.path.join(view_dir, f"manifest-v{v}.json"), "w") as f:
+            _json.dump(m, f)
+    stats = view_vacuum(view_dir, retain=1)
+    assert stats["retained"] == [2]
+    assert stats["dirs_removed"] == 1
+    assert not _os.path.isdir(_os.path.join(view_dir, "v1"))
+    assert _os.path.isdir(_os.path.join(view_dir, "v2", "seg_view"))
+    assert _os.path.isdir(_os.path.join(view_dir, "v3", "seg_view"))
+    assert _os.path.isdir(_os.path.join(view_dir, "v3", "cust_view"))
+
+
 def test_catalog_view_ignores_unflipped_then_consumes_after_flip(
     spark, tmp_path
 ):

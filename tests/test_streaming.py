@@ -1921,13 +1921,12 @@ def test_mor_cdc_empty_read_schema_from_highest_commit(spark, tmp_path):
     assert "extra" in empty.columns, empty.columns
 
 
-def test_feed_accumulates_no_checkpoint_blocks(spark, tmp_path):
-    """The feed derivation must leave NO storage blocks behind (the
-    r16 successor to the ADVICE-r11 release contract): the DV context
-    now arrives as a collected local relation instead of eagerly
-    checkpointed sidecar scans, so a catch-up loop accumulates zero
-    blocks by construction — `_ckpt_intermediates` is empty and
-    `release_local_checkpoints` on it is a harmless no-op."""
+def test_release_local_checkpoints_frees_feed_blocks(spark, tmp_path):
+    """`release_local_checkpoints` must actually free the feed's
+    checkpointed sidecar blocks from executor storage (ADVICE r11:
+    DataFrame.unpersist is a no-op for localCheckpoint, so without the
+    explicit release a catch-up loop accumulates blocks until driver
+    GC).  The feed itself stays correct before release."""
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_commit,
@@ -1942,14 +1941,15 @@ def test_feed_accumulates_no_checkpoint_blocks(spark, tmp_path):
         F.lit("u").alias("op"),
     )
     mor_cdc_commit(spark, wave, table_dir, 2)
+    feed = mor_cdc_change_feed(spark, table_dir, 2)
+    assert feed.count() == 60  # materialized: intermediates now dead
+    ckpts = feed._ckpt_intermediates
+    assert ckpts, "feed must track its checkpointed intermediates"
     jsc = spark.sparkContext._jsc.sc()
     before = {r.id() for r in jsc.getRDDStorageInfo()}
-    feed = mor_cdc_change_feed(spark, table_dir, 2)
-    assert feed.count() == 60
+    release_local_checkpoints(ckpts)
     after = {r.id() for r in jsc.getRDDStorageInfo()}
-    assert after <= before, (before, after)  # no new storage blocks
-    assert feed._ckpt_intermediates == []
-    release_local_checkpoints(feed._ckpt_intermediates)  # no-op
+    assert after < before, (before, after)
 
 
 def test_mor_cdc_concurrent_writers_serialize_or_raise(spark, tmp_path):
