@@ -55,8 +55,8 @@ from ..functions.text import (
     spark_tokens,
 )
 from ..registry import register
-from ..sources.scans import scratch_dir
-from ..sources.vlog import VersionedLog
+from ..sources.scans import build_from_empty, scratch_dir
+from ..sources.vlog import Staging, VersionedLog
 from .incremental import BATCH_MOD, _bands
 from .minhash import BANDS, K, VERIFY_THRESHOLD, _band_key, _duck_sig
 
@@ -118,10 +118,20 @@ def build_dedup_cdc_index(
     maintenance manifest shape: band/elems artifacts as [{path, v}]
     lists, an empty tombstone list, the table-commit cursor, and the
     live-row count the swap threshold is measured against."""
-    sets = _doc_sets(corpus)
-    vdir = os.path.join(index_dir, f"v{version}")
-    bands_path, elems_path = _write_index_files(sets, vdir, version)
-    manifest = {
+    with Staging(index_dir, version) as st:
+        manifest = _full_index(corpus, st.path(), version, table_commit)
+        _ddcidx_log(index_dir).publish(manifest, version)
+    return manifest
+
+
+def _full_index(
+    corpus: DataFrame, vdir: str, version: int, table_commit: int
+) -> dict:
+    """Write a full build's artifacts under `vdir`; its manifest."""
+    bands_path, elems_path = _write_index_files(
+        _doc_sets(corpus), vdir, version
+    )
+    return {
         "version": version,
         "bands": [{"path": bands_path, "v": version}],
         "elems": [{"path": elems_path, "v": version}],
@@ -130,8 +140,6 @@ def build_dedup_cdc_index(
         "n_rows": corpus.count(),
         "n_tombstoned": 0,
     }
-    _ddcidx_log(index_dir).write(manifest, version)
-    return manifest
 
 
 def maintain_dedup_index_from_feed(
@@ -163,53 +171,51 @@ def maintain_dedup_index_from_feed(
     n_del = counts.get("delete", 0)
     n_tomb = int(prev.get("n_tombstoned", 0)) + n_upd + n_del
     n_rows = int(prev["n_rows"]) + n_ins - n_del
-    if n_rows > 0 and n_tomb / n_rows >= swap_fraction:
-        release_local_checkpoints(
-            getattr(feed, "_ckpt_intermediates", [])
-        )
-        cur = mor_cdc_read(spark, table_dir, table_commit).select(
-            "doc_id", "text"
-        )
-        m = build_dedup_cdc_index(
-            spark, cur, index_dir, version=vnew,
-            table_commit=table_commit,
-        )
-        m["swapped"] = True
-        _ddcidx_log(index_dir).write(m, vnew)
-        return m
-    vdir = os.path.join(index_dir, f"v{vnew}")
-    bands = list(prev["bands"])
-    elems = list(prev["elems"])
-    if n_ins + n_upd > 0:
-        post = feed.filter(F.col("change") != "delete").select(
-            "doc_id", F.col("post_text").alias("text")
-        )
-        bands_path, elems_path = _write_index_files(
-            _doc_sets(post), vdir, vnew
-        )
-        bands.append({"path": bands_path, "v": vnew})
-        elems.append({"path": elems_path, "v": vnew})
-    tombstones = list(prev["tombstones"])
-    if n_upd + n_del > 0:
-        tomb_path = os.path.join(vdir, "tombstones")
-        (
-            feed.filter(F.col("change") != "insert")
-            .select("doc_id")
-            .withColumn("tv", F.lit(vnew))
-            .write.mode("overwrite")
-            .parquet(tomb_path)
-        )
-        tombstones.append({"path": tomb_path, "v": vnew})
-    manifest = {
-        "version": vnew,
-        "bands": bands,
-        "elems": elems,
-        "tombstones": tombstones,
-        "table_commit": table_commit,
-        "n_rows": n_rows,
-        "n_tombstoned": n_tomb,
-    }
-    _ddcidx_log(index_dir).write(manifest, vnew)
+    with Staging(index_dir, vnew) as st:
+        vdir = st.path()
+        if n_rows > 0 and n_tomb / n_rows >= swap_fraction:
+            release_local_checkpoints(
+                getattr(feed, "_ckpt_intermediates", [])
+            )
+            cur = mor_cdc_read(spark, table_dir, table_commit).select(
+                "doc_id", "text"
+            )
+            manifest = _full_index(cur, vdir, vnew, table_commit)
+            manifest["swapped"] = True
+            _ddcidx_log(index_dir).publish(manifest, vnew)
+            return manifest
+        bands = list(prev["bands"])
+        elems = list(prev["elems"])
+        if n_ins + n_upd > 0:
+            post = feed.filter(F.col("change") != "delete").select(
+                "doc_id", F.col("post_text").alias("text")
+            )
+            bands_path, elems_path = _write_index_files(
+                _doc_sets(post), vdir, vnew
+            )
+            bands.append({"path": bands_path, "v": vnew})
+            elems.append({"path": elems_path, "v": vnew})
+        tombstones = list(prev["tombstones"])
+        if n_upd + n_del > 0:
+            tomb_path = os.path.join(vdir, "tombstones")
+            (
+                feed.filter(F.col("change") != "insert")
+                .select("doc_id")
+                .withColumn("tv", F.lit(vnew))
+                .write.mode("overwrite")
+                .parquet(tomb_path)
+            )
+            tombstones.append({"path": tomb_path, "v": vnew})
+        manifest = {
+            "version": vnew,
+            "bands": bands,
+            "elems": elems,
+            "tombstones": tombstones,
+            "table_commit": table_commit,
+            "n_rows": n_rows,
+            "n_tombstoned": n_tomb,
+        }
+        _ddcidx_log(index_dir).publish(manifest, vnew)
     release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 
@@ -413,9 +419,8 @@ def dedup_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     final_commit = len(waves) + 1
     from ..streaming.mor_cdc import mor_cdc_commit, mor_cdc_init
 
-    if not os.path.exists(
-        VersionedLog(table_dir).path(final_commit)
-    ):
+    final = VersionedLog(table_dir).path(final_commit)
+    if build_from_empty(table_dir, final):
         mor_cdc_init(
             spark, corpus.withColumn("version", F.lit(0)), table_dir,
             "doc_id",

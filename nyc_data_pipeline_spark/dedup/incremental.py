@@ -188,18 +188,20 @@ def build_minhash_index(corpus_sets: DataFrame, table_dir: str) -> dict:
     (band, bkey, doc_id) and the token-set table (doc_id, elems)."""
     import os as _os
 
-    from ..sources.vlog import VersionedLog
+    from ..sources.vlog import Staging, VersionedLog
 
-    bands_path = _os.path.join(table_dir, "v1", "bands")
-    elems_path = _os.path.join(table_dir, "v1", "elems")
-    _bands(corpus_sets).withColumnRenamed("doc_id", "corpus_id").write.mode(
-        "overwrite"
-    ).parquet(bands_path)
-    corpus_sets.selectExpr("doc_id AS idc", "elems AS ec").write.mode(
-        "overwrite"
-    ).parquet(elems_path)
-    manifest = {"version": 1, "bands": bands_path, "elems": elems_path}
-    VersionedLog(table_dir).write(manifest, 1)
+    with Staging(table_dir, 1) as st:
+        vdir = st.path()
+        bands_path = _os.path.join(vdir, "bands")
+        elems_path = _os.path.join(vdir, "elems")
+        _bands(corpus_sets).withColumnRenamed(
+            "doc_id", "corpus_id"
+        ).write.mode("overwrite").parquet(bands_path)
+        corpus_sets.selectExpr("doc_id AS idc", "elems AS ec").write.mode(
+            "overwrite"
+        ).parquet(elems_path)
+        manifest = {"version": 1, "bands": bands_path, "elems": elems_path}
+        VersionedLog(table_dir).publish(manifest, 1)
     return manifest
 
 
@@ -247,7 +249,7 @@ def dedup_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     build commits the band + token-set artifacts, the probe reads them
     — signatures are computed for the batch only.  Same oracle as the
     in-memory form (persistence must be semantically invisible)."""
-    from ..sources.scans import scratch_dir
+    from ..sources.scans import build_from_empty, scratch_dir
 
     d = load_table(spark, sf_dir, "documents")
     sets = d.selectExpr(
@@ -255,6 +257,7 @@ def dedup_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"array_distinct({spark_token_hashes(spark_tokens('text'))}) AS elems",
     ).repartition("doc_id")
     table_dir = scratch_dir("minhash_index", sf_dir)
+    build_from_empty(table_dir)
     manifest = build_minhash_index(
         sets.filter(F.col("doc_id") % BATCH_MOD != 0), table_dir
     )

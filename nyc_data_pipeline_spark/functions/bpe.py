@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ..sources.scans import scratch_dir
-from ..sources.vlog import VersionedLog
+from ..sources.vlog import Staging, VersionedLog
 from .text import duck_tokens, spark_tokens
 
 TOP_PAIRS = 10
@@ -402,31 +402,32 @@ def build_bpe_index(
     pattern): the K-entry merge table (the semantic artifact a
     production tokenizer ships) and the tokenized VOCABULARY it induces
     (word -> n_tok over the corpus's distinct words — the lookup the
-    apply step joins against), both immutable parquet under
-    v{version}/ named by an atomically-published manifest.  Training is
+    apply step joins against), both immutable parquet under a staged
+    v{version}-{token}/ named by a CAS-published manifest.  Training is
     the K-round loop exactly once; every later apply is a parquet scan
     + one vocabulary-scale join, never a retrain."""
     merges, syms = _learn_merges(d, k)
     spark = d.sparkSession
-    vdir = os.path.join(table_dir, f"v{version}")
-    merges_path = os.path.join(vdir, "merges")
-    vocab_path = os.path.join(vdir, "vocab")
-    spark.createDataFrame(merges, _MERGES_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(merges_path)
-    (
-        syms.groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("n_tok"))
-        .write.mode("overwrite")
-        .parquet(vocab_path)
-    )
-    manifest = {
-        "version": version,
-        "k": k,
-        "merges": merges_path,
-        "vocab": vocab_path,
-    }
-    VersionedLog(table_dir).write(manifest, version)
+    with Staging(table_dir, version) as st:
+        vdir = st.path()
+        merges_path = os.path.join(vdir, "merges")
+        vocab_path = os.path.join(vdir, "vocab")
+        spark.createDataFrame(merges, _MERGES_SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(merges_path)
+        (
+            syms.groupBy("word")
+            .agg(F.count("*").cast("bigint").alias("n_tok"))
+            .write.mode("overwrite")
+            .parquet(vocab_path)
+        )
+        manifest = {
+            "version": version,
+            "k": k,
+            "merges": merges_path,
+            "vocab": vocab_path,
+        }
+        VersionedLog(table_dir).publish(manifest, version)
     return manifest
 
 

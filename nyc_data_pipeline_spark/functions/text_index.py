@@ -50,8 +50,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, persist_scoped
 from ..registry import register
-from ..sources.scans import scratch_dir
-from ..sources.vlog import VersionedLog
+from ..sources.scans import build_from_empty, scratch_dir
+from ..sources.vlog import Staging, VersionedLog
 from .bm25 import _ALL_TERMS, _CONTRIB, _IDF, BM25_QUERIES, BM25_TOPK
 from .text import duck_tokens, spark_tokens
 
@@ -97,7 +97,20 @@ def build_text_index(
     """Full (re)build over `corpus` (doc_id, text): the df lexicon as
     ONE base file of signed counts (d = the term's df), plus the two
     corpus stats in the manifest."""
-    base_path = os.path.join(index_dir, f"v{version}", "df")
+    with Staging(index_dir, version) as st:
+        manifest = _full_index(
+            spark, corpus, st.path(), version, table_commit
+        )
+        _tidx_log(index_dir).publish(manifest, version)
+    return manifest
+
+
+def _full_index(
+    spark: SparkSession, corpus: DataFrame, vdir: str, version: int,
+    table_commit: int,
+) -> dict:
+    """Write a full build's df lexicon under `vdir`; its manifest."""
+    base_path = os.path.join(vdir, "df")
     df = (
         _doc_terms(corpus)
         .groupBy("t")
@@ -108,7 +121,7 @@ def build_text_index(
         F.count("*").alias("n"), F.sum(_dl_expr("text")).alias("s")
     ).collect()[0]
     n_terms = spark.read.parquet(base_path).count()
-    manifest = {
+    return {
         "version": version,
         "dfs": [{"path": base_path, "v": version}],
         "table_commit": table_commit,
@@ -117,8 +130,6 @@ def build_text_index(
         "n_base_terms": int(n_terms),
         "n_delta_rows": 0,
     }
-    _tidx_log(index_dir).write(manifest, version)
-    return manifest
 
 
 def maintain_text_index_from_feed(
@@ -171,36 +182,35 @@ def maintain_text_index_from_feed(
     ).collect()[0]
     n_docs = int(prev["n_docs"]) + int(stat["nd"] or 0)
     sum_dl = int(prev["sum_dl"]) + int(stat["sd"] or 0)
-    delta_path = os.path.join(index_dir, f"v{vnew}", "df")
-    delta.write.mode("overwrite").parquet(delta_path)
-    n_delta = int(
-        prev["n_delta_rows"]
-    ) + spark.read.parquet(delta_path).count()
-    release_local_checkpoints(ckpts)
-    if (
-        prev["n_base_terms"] > 0
-        and n_delta / prev["n_base_terms"] >= swap_fraction
-    ):
-        cur = mor_cdc_read(spark, table_dir, table_commit).select(
-            "doc_id", "text"
-        )
-        m = build_text_index(
-            spark, cur, index_dir, version=vnew,
-            table_commit=table_commit,
-        )
-        m["swapped"] = True
-        _tidx_log(index_dir).write(m, vnew)
-        return m
-    manifest = {
-        "version": vnew,
-        "dfs": [*prev["dfs"], {"path": delta_path, "v": vnew}],
-        "table_commit": table_commit,
-        "n_docs": n_docs,
-        "sum_dl": sum_dl,
-        "n_base_terms": int(prev["n_base_terms"]),
-        "n_delta_rows": n_delta,
-    }
-    _tidx_log(index_dir).write(manifest, vnew)
+    with Staging(index_dir, vnew) as st:
+        vdir = st.path()
+        delta_path = os.path.join(vdir, "df")
+        delta.write.mode("overwrite").parquet(delta_path)
+        n_delta = int(
+            prev["n_delta_rows"]
+        ) + spark.read.parquet(delta_path).count()
+        release_local_checkpoints(ckpts)
+        if (
+            prev["n_base_terms"] > 0
+            and n_delta / prev["n_base_terms"] >= swap_fraction
+        ):
+            cur = mor_cdc_read(spark, table_dir, table_commit).select(
+                "doc_id", "text"
+            )
+            manifest = _full_index(spark, cur, vdir, vnew, table_commit)
+            manifest["swapped"] = True
+            _tidx_log(index_dir).publish(manifest, vnew)
+            return manifest
+        manifest = {
+            "version": vnew,
+            "dfs": [*prev["dfs"], {"path": delta_path, "v": vnew}],
+            "table_commit": table_commit,
+            "n_docs": n_docs,
+            "sum_dl": sum_dl,
+            "n_base_terms": int(prev["n_base_terms"]),
+            "n_delta_rows": n_delta,
+        }
+        _tidx_log(index_dir).publish(manifest, vnew)
     return manifest
 
 
@@ -413,9 +423,8 @@ def text_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = scratch_dir("text_idx_index", sf_dir)
     waves = _text_waves(d)
     final_commit = len(waves) + 1
-    if not os.path.exists(
-        VersionedLog(table_dir).path(final_commit)
-    ):
+    final = VersionedLog(table_dir).path(final_commit)
+    if build_from_empty(table_dir, final):
         mor_cdc_init(
             spark, d.withColumn("version", F.lit(0)), table_dir, "doc_id"
         )

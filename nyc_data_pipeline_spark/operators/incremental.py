@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..exprs import dec, sql_dsum
 from ..registry import register
-from ..sources.vlog import VersionedLog
+from ..sources.vlog import Staging, VersionedLog
 
 MICRO = 1_000_000
 
@@ -587,32 +587,57 @@ def build_join_view(
     """Commit the materialized view pair as frozen parquet artifacts:
     `cust_view` — the per-customer auxiliary γ_c(n, sum_cents)(A₁) the
     ΔB term looks up — and `seg_view`, the dashboard rollup derived
-    from it with ONE dim join (never a second fact pass)."""
+    from it with ONE dim join (never a second fact pass).  `a1`/`b1`
+    are the tables' first commits: the cursors start at (1, 1)."""
     import os as _os
 
     spark = a1.sparkSession
-    vdir = _os.path.join(table_dir, f"v{version}")
-    cust_path = _os.path.join(vdir, "cust_view")
-    seg_path = _os.path.join(vdir, "seg_view")
-    cust = a1.groupBy("c").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum("cents").cast("bigint").alias("sum_cents"),
-    )
-    cust.write.mode("overwrite").parquet(cust_path)
-    cust2 = spark.read.parquet(cust_path)
-    (
-        cust2.join(F.broadcast(b1), "c")
-        .groupBy("segment")
-        .agg(
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            F.sum("sum_cents").cast("bigint").alias("sum_cents"),
+    with Staging(table_dir, version) as st:
+        vdir = st.path()
+        cust_path = _os.path.join(vdir, "cust_view")
+        seg_path = _os.path.join(vdir, "seg_view")
+        cust = a1.groupBy("c").agg(
+            F.count("*").cast("bigint").alias("n_rows"),
+            F.sum("cents").cast("bigint").alias("sum_cents"),
         )
-        .write.mode("overwrite")
-        .parquet(seg_path)
-    )
-    manifest = {"version": version, "cust_view": cust_path,
-                "seg_view": seg_path}
-    VersionedLog(table_dir).write(manifest, version)
+        cust.write.mode("overwrite").parquet(cust_path)
+        cust2 = spark.read.parquet(cust_path)
+        (
+            cust2.join(F.broadcast(b1), "c")
+            .groupBy("segment")
+            .agg(
+                F.sum("n_rows").cast("bigint").alias("n_rows"),
+                F.sum("sum_cents").cast("bigint").alias("sum_cents"),
+            )
+            .write.mode("overwrite")
+            .parquet(seg_path)
+        )
+        manifest = {"version": version, "cust_view": cust_path,
+                    "seg_view": seg_path, "a_version": 1, "b_version": 1}
+        VersionedLog(table_dir).publish(manifest, version)
+    return manifest
+
+
+def _publish_view_pair(
+    view_dir: str, version: int, seg: DataFrame, cust: DataFrame,
+    fields: dict,
+) -> dict:
+    """Stage a refreshed (seg_view, cust_view) pair and publish view
+    version `version` pointing at it, with `fields` (cursors and
+    stamps) merged into the manifest."""
+    import os as _os
+
+    with Staging(view_dir, version) as st:
+        vdir = st.path()
+        manifest = {
+            "version": version,
+            "seg_view": _os.path.join(vdir, "seg_view"),
+            "cust_view": _os.path.join(vdir, "cust_view"),
+            **fields,
+        }
+        seg.write.mode("overwrite").parquet(manifest["seg_view"])
+        cust.write.mode("overwrite").parquet(manifest["cust_view"])
+        VersionedLog(view_dir).publish(manifest, version)
     return manifest
 
 
@@ -944,9 +969,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads commit N-1's artifacts plus the epoch's feeds, never a fact
     table — the O(changes) refresh loop a 100 TB dashboard needs,
     measured flat under fact growth by scripts/ivm_probe.py."""
-    import os as _os
-
-    from ..sources.scans import scratch_dir
+    from ..sources.scans import build_from_empty, scratch_dir
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_commit,
@@ -962,11 +985,9 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = _ivm_b1(spark, sf_dir)
 
     view_log = VersionedLog(view_dir)
-    if not _os.path.exists(view_log.path(3)):
+    if build_from_empty(view_dir, view_log.path(3)):
         # --- the two CDC tables: base commits + change epochs
-        if not _os.path.exists(
-            VersionedLog(a_dir).path(3)
-        ):
+        if build_from_empty(a_dir, VersionedLog(a_dir).path(3)):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
             )
@@ -996,9 +1017,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             mor_cdc_commit(spark, wave_a2, a_dir, 3)
-        if not _os.path.exists(
-            VersionedLog(b_dir).path(2)
-        ):
+        if build_from_empty(b_dir, VersionedLog(b_dir).path(2)):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
             )
@@ -1018,19 +1037,13 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             mor_cdc_commit(spark, wave_b, b_dir, 2)
 
-        # --- view v1: built over the two v1 table reads
-        if not _os.path.exists(view_log.path(1)):
-            build_join_view(
-                mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
-                mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
-                view_dir,
-            )
-        m1 = view_log.load(1)
-        if "a_version" not in m1:
-            # cursor columns: which table commits this view reflects —
-            # what catch_up_join_view advances from
-            m1.update({"a_version": 1, "b_version": 1})
-            view_log.write(m1, 1)
+        # --- view v1: built over the two v1 table reads; its cursors
+        # (1, 1) are what catch_up_join_view advances from
+        m1 = build_join_view(
+            mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
+            mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
+            view_dir,
+        )
 
         # --- refresh 1: ΔA₁ only (B unchanged); advance BOTH views.
         # The signed delta is O(changes): materialize it ONCE (it
@@ -1053,25 +1066,12 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust_v2 = advance_cust_view(
             spark.read.parquet(m1["cust_view"]), da1
         )
-        v2 = _os.path.join(view_dir, "v2")
-        seg_v2.write.mode("overwrite").parquet(_os.path.join(v2, "seg_view"))
-        cust_v2.write.mode("overwrite").parquet(
-            _os.path.join(v2, "cust_view")
-        )
-        view_log.write(
-            {
-                "version": 2,
-                "seg_view": _os.path.join(v2, "seg_view"),
-                "cust_view": _os.path.join(v2, "cust_view"),
-                "a_version": 2,
-                "b_version": 1,
-            },
-            2,
+        m2 = _publish_view_pair(
+            view_dir, 2, seg_v2, cust_v2, {"a_version": 2, "b_version": 1}
         )
 
         # --- refresh 2: ΔA₂ + ΔB, against the v2 ARTIFACTS (the
         # auxiliary maintained in refresh 1 is load-bearing here)
-        m2 = view_log.load(2)
         feed_a2 = mor_cdc_change_feed(spark, a_dir, 3)
         da2 = _feed_to_signed_a(feed_a2).localCheckpoint(eager=True)
         release_local_checkpoints(
@@ -1090,20 +1090,8 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust_v3 = advance_cust_view(
             spark.read.parquet(m2["cust_view"]), da2
         )
-        v3 = _os.path.join(view_dir, "v3")
-        seg_v3.write.mode("overwrite").parquet(_os.path.join(v3, "seg_view"))
-        cust_v3.write.mode("overwrite").parquet(
-            _os.path.join(v3, "cust_view")
-        )
-        view_log.write(
-            {
-                "version": 3,
-                "seg_view": _os.path.join(v3, "seg_view"),
-                "cust_view": _os.path.join(v3, "cust_view"),
-                "a_version": 3,
-                "b_version": 2,
-            },
-            3,
+        _publish_view_pair(
+            view_dir, 3, seg_v3, cust_v3, {"a_version": 3, "b_version": 2}
         )
         # v3 artifacts written: the lazy B feed's sidecars and the
         # frozen signed deltas have no remaining consumers
@@ -1192,7 +1180,8 @@ def catch_up_join_view(
     redelivery on the source tables are both no-ops here by
     construction.  Crash-safe the same way every manifest writer is:
     artifacts land before the manifest, version derived from the
-    on-disk chain, rewrites idempotent.
+    on-disk chain; a rerun after a crash folds from the last
+    published refresh's cursors into the next version.
 
     The unseen feeds are read as ONE evolution-crossing span per side
     (`mor_cdc_change_feed_span`, VERDICT r13 ask #2) rather than a
@@ -1203,8 +1192,18 @@ def catch_up_join_view(
     widen of a projected column mid-catch-up folds exactly like any
     other span, with the renamed column aliased back to the view's
     canonical name.  Evolution commits contribute empty feeds."""
-    import os as _os
+    return _catch_up_join_view(
+        spark, view_dir, a_dir, b_dir, a_to, b_to, stamp={}
+    )
 
+
+def _catch_up_join_view(
+    spark: SparkSession, view_dir: str, a_dir: str, b_dir: str,
+    a_to: int | None, b_to: int | None, stamp: dict,
+) -> dict:
+    """`catch_up_join_view`, with `stamp` merged into the published
+    refresh's manifest (the catalog catch-up records its snapshot
+    there); nothing unseen publishes nothing."""
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed_span,
         mor_cdc_read,
@@ -1302,26 +1301,17 @@ def catch_up_join_view(
         db,
     )
     cust_new = advance_cust_view(spark.read.parquet(m["cust_view"]), da)
-    vdir = _os.path.join(view_dir, f"v{cur + 1}")
-    seg_new.write.mode("overwrite").parquet(_os.path.join(vdir, "seg_view"))
-    cust_new.write.mode("overwrite").parquet(
-        _os.path.join(vdir, "cust_view")
-    )
-    manifest = {
-        "version": cur + 1,
-        "seg_view": _os.path.join(vdir, "seg_view"),
-        "cust_view": _os.path.join(vdir, "cust_view"),
-        "a_version": a_latest,
-        "b_version": b_latest,
-    }
+    fields = {"a_version": a_latest, "b_version": b_latest, **stamp}
     # carry the projected columns' field ids forward (stamped on the
     # first catch-up over a field-id chain) so later renames on the
     # base tables keep resolving
     if a_fields is not None:
-        manifest["a_fields"] = a_fields
+        fields["a_fields"] = a_fields
     if b_fields is not None:
-        manifest["b_fields"] = b_fields
-    view_log.write(manifest, cur + 1)
+        fields["b_fields"] = b_fields
+    manifest = _publish_view_pair(
+        view_dir, cur + 1, seg_new, cust_new, fields
+    )
     # both view artifacts are written: the lazy B feeds' checkpointed
     # sidecars (and the frozen ΔA) have no remaining consumers —
     # release them now rather than at driver GC (ADVICE r11: a
@@ -1340,24 +1330,20 @@ def catch_up_view_from_catalog(
     AND the versions to catch up to come from one catalog read, so the
     view always reflects a cross-table state that was simultaneously
     visible — one cursor (the catalog version, stamped in the view
-    manifest) instead of one per table.  A table commit that published
-    but whose catalog flip is pending (the txn crash window) is
-    invisible here exactly as it is to every catalog reader."""
+    manifest by the refresh's own publish) instead of one per table.
+    A table commit that published but whose catalog flip is pending
+    (the txn crash window) is invisible here exactly as it is to every
+    catalog reader.  A catalog version that moved no member this view
+    reads publishes nothing: the view already reflects it."""
     from ..streaming.txn import catalog_load
 
     cat = catalog_load(catalog_dir, version)
     a, b = cat["tables"][a_name], cat["tables"][b_name]
-    m = catch_up_join_view(
+    return _catch_up_join_view(
         spark, view_dir, a["dir"], b["dir"],
-        a_to=int(a["version"]), b_to=int(b["version"]),
+        int(a["version"]), int(b["version"]),
+        stamp={"catalog_version": cat["version"]},
     )
-    if m.get("catalog_version") != cat["version"]:
-        # stamp which catalog snapshot this view reflects (idempotent:
-        # the early-return path re-stamps the same manifest in place)
-        m = dict(m)
-        m["catalog_version"] = cat["version"]
-        VersionedLog(view_dir).write(m, m["version"])
-    return m
 
 
 def catalog_read_view(
@@ -1552,9 +1538,6 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
             view_dir,
         )
-        m1 = VersionedLog(view_dir).load(1)
-        m1.update({"a_version": 1, "b_version": 1})
-        VersionedLog(view_dir).write(m1, 1)
     m = catch_up_view_from_catalog(
         spark, view_dir, cat_dir, "orders", "customer"
     )
@@ -1663,9 +1646,6 @@ def ivm_view_txn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
                 view_dir,
             )
-            m1 = load_view_manifest(view_dir, 1)
-            m1.update({"a_version": 1, "b_version": 1})
-            VersionedLog(view_dir).write(m1, 1)
         if catalog_latest(cat_dir) < 1:
             txn_catalog_init(
                 cat_dir,
@@ -1792,7 +1772,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(changes) refresh instead of a per-refresh rescan."""
     import os as _os
 
-    from ..sources.scans import scratch_dir
+    from ..sources.scans import build_from_empty, scratch_dir
     from ..streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -1831,9 +1811,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("op", F.lit("u"))
         )
         # --- table A: base + two change epochs
-        if not _os.path.exists(
-            VersionedLog(a_dir).path(3)
-        ):
+        if build_from_empty(a_dir, VersionedLog(a_dir).path(3)):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
             )
@@ -1855,9 +1833,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             mor_cdc_commit(spark, wave_a2, a_dir, 3)
         # --- table B: base + churn/move epoch
-        if not _os.path.exists(
-            VersionedLog(b_dir).path(2)
-        ):
+        if build_from_empty(b_dir, VersionedLog(b_dir).path(2)):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
             )
@@ -1884,13 +1860,11 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not _os.path.exists(
             VersionedLog(view_dir).path(1)
         ):
-            m1 = build_join_view(
+            build_join_view(
                 mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
                 mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
                 view_dir,
             )
-            m1.update({"a_version": 1, "b_version": 1})
-            VersionedLog(view_dir).write(m1, 1)
         catch_up_join_view(spark, view_dir, a_dir, b_dir)
         # --- more commits land while the view sleeps: a re-score
         # wave, a STALE redelivery of wave 1, a second move wave

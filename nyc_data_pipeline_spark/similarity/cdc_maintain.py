@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ..sources.scans import scratch_dir
-from ..sources.vlog import VersionedLog
+from ..sources.vlog import Staging, VersionedLog
 from .adc import N_CODES, N_SUB, SEED_SPLIT, _codebook, _micro_rows, pq_assign
 from .brute_force import N_QUERIES, TOP_K
 from .centroids import MICRO, PQ_SUB_DIMS
@@ -130,11 +130,21 @@ def build_cdc_index(
     a tombstone list (empty: a fresh train has no shadow debt), the
     table-commit CURSOR this index reflects, and the live-row count
     the swap threshold is measured against."""
+    with Staging(index_dir, version) as st:
+        manifest = _full_index(corpus, st.path(), version, table_commit)
+        _cdcidx_log(index_dir).publish(manifest, version)
+    return manifest
+
+
+def _full_index(
+    corpus: DataFrame, vdir: str, version: int, table_commit: int
+) -> dict:
+    """Train and write a full build's artifacts under `vdir`; its
+    manifest."""
     v = _micro_rows(corpus)
     cent = _cell_centroids(v)
     assign = _nearest_cells(v, cent, "vec_id", 1)
     cmicro = _codebook(v)
-    vdir = os.path.join(index_dir, f"v{version}")
     cent_path = os.path.join(vdir, "centroids")
     cb_path = os.path.join(vdir, "codebook")
     codes_path = os.path.join(vdir, "codes")
@@ -148,7 +158,7 @@ def build_cdc_index(
         .partitionBy("cid")
         .parquet(codes_path)
     )
-    manifest = {
+    return {
         "version": version,
         "centroids": cent_path,
         "codebook": cb_path,
@@ -168,8 +178,6 @@ def build_cdc_index(
             "micro": MICRO,
         },
     }
-    _cdcidx_log(index_dir).write(manifest, version)
-    return manifest
 
 
 def maintain_ivf_pq_from_feed(
@@ -204,68 +212,66 @@ def maintain_ivf_pq_from_feed(
     n_del = feed_counts.get("delete", 0)
     n_tomb = int(prev.get("n_tombstoned", 0)) + n_upd + n_del
     n_rows = int(prev["n_rows"]) + n_ins - n_del
-    if n_rows > 0 and n_tomb / n_rows >= swap_fraction:
-        # maintenance debt crossed the threshold: retrain-as-swap from
-        # the table's CURRENT state — one corpus pass, fresh
-        # artifacts, shadow debt cleared (the compaction analog)
-        release_local_checkpoints(
-            getattr(feed, "_ckpt_intermediates", [])
-        )
-        cur = mor_cdc_read(spark, emb_dir, table_commit).select(
-            "vec_id", "embedding", "label"
-        )
-        m = build_cdc_index(
-            spark, cur, index_dir, version=vnew,
-            table_commit=table_commit,
-        )
-        m["swapped"] = True
-        _cdcidx_log(index_dir).write(m, vnew)
-        return m
-    cent = spark.read.parquet(prev["centroids"])
-    cmicro = spark.read.parquet(prev["codebook"])
-    vdir = os.path.join(index_dir, f"v{vnew}")
-    codes = list(prev["codes"])
-    if n_ins + n_upd > 0:
-        post = feed.filter(F.col("change") != "delete").select(
-            "vec_id",
-            F.col("post_embedding").alias("embedding"),
-            F.col("post_label").alias("label"),
-        )
-        vb = _micro_rows(post)
-        assign = _nearest_cells(vb, cent, "vec_id", 1)
-        codes_path = os.path.join(vdir, "codes")
-        (
-            pq_assign(vb, cmicro)
-            .join(assign, "vec_id")
-            .repartition(F.col("cid"))
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(codes_path)
-        )
-        codes.append({"path": codes_path, "v": vnew})
-    tombstones = list(prev["tombstones"])
-    if n_upd + n_del > 0:
-        tomb_path = os.path.join(vdir, "tombstones")
-        (
-            feed.filter(F.col("change") != "insert")
-            .select("vec_id")
-            .write.mode("overwrite")
-            .parquet(tomb_path)
-        )
-        tombstones.append({"path": tomb_path, "v": vnew})
-    manifest = {
-        "version": vnew,
-        "centroids": prev["centroids"],
-        "codebook": prev["codebook"],
-        "codes": codes,
-        "tombstones": tombstones,
-        "table_commit": table_commit,
-        "n_rows": n_rows,
-        "n_tombstoned": n_tomb,
-        "n_appended": n_ins + n_upd,
-        "params": prev["params"],
-    }
-    _cdcidx_log(index_dir).write(manifest, vnew)
+    with Staging(index_dir, vnew) as st:
+        vdir = st.path()
+        if n_rows > 0 and n_tomb / n_rows >= swap_fraction:
+            # maintenance debt crossed the threshold: retrain-as-swap from
+            # the table's CURRENT state — one corpus pass, fresh
+            # artifacts, shadow debt cleared (the compaction analog)
+            release_local_checkpoints(
+                getattr(feed, "_ckpt_intermediates", [])
+            )
+            cur = mor_cdc_read(spark, emb_dir, table_commit).select(
+                "vec_id", "embedding", "label"
+            )
+            manifest = _full_index(cur, vdir, vnew, table_commit)
+            manifest["swapped"] = True
+            _cdcidx_log(index_dir).publish(manifest, vnew)
+            return manifest
+        cent = spark.read.parquet(prev["centroids"])
+        cmicro = spark.read.parquet(prev["codebook"])
+        codes = list(prev["codes"])
+        if n_ins + n_upd > 0:
+            post = feed.filter(F.col("change") != "delete").select(
+                "vec_id",
+                F.col("post_embedding").alias("embedding"),
+                F.col("post_label").alias("label"),
+            )
+            vb = _micro_rows(post)
+            assign = _nearest_cells(vb, cent, "vec_id", 1)
+            codes_path = os.path.join(vdir, "codes")
+            (
+                pq_assign(vb, cmicro)
+                .join(assign, "vec_id")
+                .repartition(F.col("cid"))
+                .write.mode("overwrite")
+                .partitionBy("cid")
+                .parquet(codes_path)
+            )
+            codes.append({"path": codes_path, "v": vnew})
+        tombstones = list(prev["tombstones"])
+        if n_upd + n_del > 0:
+            tomb_path = os.path.join(vdir, "tombstones")
+            (
+                feed.filter(F.col("change") != "insert")
+                .select("vec_id")
+                .write.mode("overwrite")
+                .parquet(tomb_path)
+            )
+            tombstones.append({"path": tomb_path, "v": vnew})
+        manifest = {
+            "version": vnew,
+            "centroids": prev["centroids"],
+            "codebook": prev["codebook"],
+            "codes": codes,
+            "tombstones": tombstones,
+            "table_commit": table_commit,
+            "n_rows": n_rows,
+            "n_tombstoned": n_tomb,
+            "n_appended": n_ins + n_upd,
+            "params": prev["params"],
+        }
+        _cdcidx_log(index_dir).publish(manifest, vnew)
     release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 

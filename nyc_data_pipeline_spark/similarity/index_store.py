@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..sources.scans import scratch_dir
-from ..sources.vlog import VersionedLog
+from ..sources.scans import build_from_empty, scratch_dir
+from ..sources.vlog import Staging, VersionedLog
 from .adc import (
     N_CODES,
     N_SUB,
@@ -58,34 +58,35 @@ from .ivf import K_CELLS
 
 def build_pq_index(emb: DataFrame, table_dir: str, version: int = 1) -> dict:
     """The index BUILD pass: derive the seed codebook and per-vector PQ
-    codes from the corpus, commit both as immutable parquet under
-    v{version}/, and publish a manifest naming them.  Returns the
-    manifest dict."""
+    codes from the corpus, commit both as immutable parquet under a
+    staged v{version}-{token}/, and publish a manifest naming them.
+    Returns the manifest dict."""
     v = _micro_rows(emb)
     cmicro = _codebook(v)
-    vdir = os.path.join(table_dir, f"v{version}")
-    cb_path = os.path.join(vdir, "codebook")
-    codes_path = os.path.join(vdir, "codes")
-    cmicro.write.mode("overwrite").parquet(cb_path)
-    # the code table is the artifact the corpus-scale search shuffles
-    # on; repartition by subspace/code so a probe's broadcast-LUT join
-    # streams it without a further exchange at read time.
-    pq_assign(v, cmicro).repartition("sub", "code").write.mode(
-        "overwrite"
-    ).parquet(codes_path)
-    manifest = {
-        "version": version,
-        "codebook": cb_path,
-        "codes": codes_path,
-        "params": {
-            "n_codes": N_CODES,
-            "n_sub": N_SUB,
-            "sub_dims": PQ_SUB_DIMS,
-            "seed_split": SEED_SPLIT,
-            "micro": MICRO,
-        },
-    }
-    VersionedLog(table_dir).write(manifest, version)
+    with Staging(table_dir, version) as st:
+        vdir = st.path()
+        cb_path = os.path.join(vdir, "codebook")
+        codes_path = os.path.join(vdir, "codes")
+        cmicro.write.mode("overwrite").parquet(cb_path)
+        # the code table is the artifact the corpus-scale search shuffles
+        # on; repartition by subspace/code so a probe's broadcast-LUT join
+        # streams it without a further exchange at read time.
+        pq_assign(v, cmicro).repartition("sub", "code").write.mode(
+            "overwrite"
+        ).parquet(codes_path)
+        manifest = {
+            "version": version,
+            "codebook": cb_path,
+            "codes": codes_path,
+            "params": {
+                "n_codes": N_CODES,
+                "n_sub": N_SUB,
+                "sub_dims": PQ_SUB_DIMS,
+                "seed_split": SEED_SPLIT,
+                "micro": MICRO,
+            },
+        }
+        VersionedLog(table_dir).publish(manifest, version)
     return manifest
 
 
@@ -257,6 +258,7 @@ def sim_adc_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted artifacts are certified value-for-value too."""
     emb = load_table(spark, sf_dir, "embeddings")
     table_dir = scratch_dir("pq_index", sf_dir)
+    build_from_empty(table_dir)
     build_pq_index(emb, table_dir, version=1)
     cmicro, codes = load_pq_index(spark, table_dir, version=1)
     queries = _micro_rows(emb.filter(F.col("vec_id") < N_QUERIES)).select(
@@ -338,36 +340,37 @@ def build_ivf_pq_index(emb: DataFrame, table_dir: str, version: int = 1) -> dict
     cent = _cell_centroids(v)
     assign = _nearest_cells(v, cent, "vec_id", 1)
     cmicro = _codebook(v)
-    vdir = os.path.join(table_dir, f"v{version}")
-    cent_path = os.path.join(vdir, "centroids")
-    cb_path = os.path.join(vdir, "codebook")
-    codes_path = os.path.join(vdir, "codes")
-    cent.write.mode("overwrite").parquet(cent_path)
-    cmicro.write.mode("overwrite").parquet(cb_path)
-    (
-        pq_assign(v, cmicro)
-        .join(assign, "vec_id")
-        .repartition(F.col("cid"))
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(codes_path)
-    )
-    manifest = {
-        "version": version,
-        "centroids": cent_path,
-        "codebook": cb_path,
-        "codes": codes_path,
-        "params": {
-            "k_cells": K_CELLS,
-            "nprobe": IVFPQ_NPROBE,
-            "n_codes": N_CODES,
-            "n_sub": N_SUB,
-            "sub_dims": PQ_SUB_DIMS,
-            "seed_split": SEED_SPLIT,
-            "micro": MICRO,
-        },
-    }
-    VersionedLog(table_dir, "ivfpq-manifest").write(manifest, version)
+    with Staging(table_dir, version) as st:
+        vdir = st.path()
+        cent_path = os.path.join(vdir, "centroids")
+        cb_path = os.path.join(vdir, "codebook")
+        codes_path = os.path.join(vdir, "codes")
+        cent.write.mode("overwrite").parquet(cent_path)
+        cmicro.write.mode("overwrite").parquet(cb_path)
+        (
+            pq_assign(v, cmicro)
+            .join(assign, "vec_id")
+            .repartition(F.col("cid"))
+            .write.mode("overwrite")
+            .partitionBy("cid")
+            .parquet(codes_path)
+        )
+        manifest = {
+            "version": version,
+            "centroids": cent_path,
+            "codebook": cb_path,
+            "codes": codes_path,
+            "params": {
+                "k_cells": K_CELLS,
+                "nprobe": IVFPQ_NPROBE,
+                "n_codes": N_CODES,
+                "n_sub": N_SUB,
+                "sub_dims": PQ_SUB_DIMS,
+                "seed_split": SEED_SPLIT,
+                "micro": MICRO,
+            },
+        }
+        VersionedLog(table_dir, "ivfpq-manifest").publish(manifest, version)
     return manifest
 
 
@@ -542,6 +545,7 @@ def sim_ivf_adc_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, pruning, and rerank are all hash-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
     table_dir = scratch_dir("ivfpq_index", sf_dir)
+    build_from_empty(table_dir)
     build_ivf_pq_index(emb, table_dir, version=1)
     cent, cmicro, codes = load_ivf_pq_index(spark, table_dir, version=1)
     queries = _micro_rows(emb.filter(F.col("vec_id") < N_QUERIES)).select(
@@ -582,27 +586,28 @@ def append_ivf_pq(
     cmicro = spark.read.parquet(prev["codebook"])
     vb = _micro_rows(batch)
     assign = _nearest_cells(vb, cent, "vec_id", 1)
-    codes_path = os.path.join(table_dir, f"v{version}", "codes")
-    (
-        pq_assign(vb, cmicro)
-        .join(assign, "vec_id")
-        .repartition(F.col("cid"))
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(codes_path)
-    )
-    prev_codes = prev["codes"]
-    manifest = {
-        "version": version,
-        "centroids": prev["centroids"],
-        "codebook": prev["codebook"],
-        "codes": (
-            prev_codes if isinstance(prev_codes, list) else [prev_codes]
+    with Staging(table_dir, version) as st:
+        codes_path = os.path.join(st.path(), "codes")
+        (
+            pq_assign(vb, cmicro)
+            .join(assign, "vec_id")
+            .repartition(F.col("cid"))
+            .write.mode("overwrite")
+            .partitionBy("cid")
+            .parquet(codes_path)
         )
-        + [codes_path],
-        "params": prev["params"],
-    }
-    VersionedLog(table_dir, "ivfpq-manifest").write(manifest, version)
+        prev_codes = prev["codes"]
+        manifest = {
+            "version": version,
+            "centroids": prev["centroids"],
+            "codebook": prev["codebook"],
+            "codes": (
+                prev_codes if isinstance(prev_codes, list) else [prev_codes]
+            )
+            + [codes_path],
+            "params": prev["params"],
+        }
+        VersionedLog(table_dir, "ivfpq-manifest").publish(manifest, version)
     return manifest
 
 

@@ -72,6 +72,18 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
     )
 
 
+def build_from_empty(table_dir: str, final: str | None = None) -> bool:
+    """Whether a scratch query must (re)build the chain it owns in
+    `table_dir`: when its last manifest `final` is absent, or always
+    (`final` None, a query that commits on every call).  The directory
+    is then emptied: a version is published once, so a rerun over a
+    failed attempt's partial chain would conflict at v1."""
+    if final is not None and os.path.exists(final):
+        return False
+    shutil.rmtree(table_dir, ignore_errors=True)
+    return True
+
+
 def atomic_json_dump(obj, path: str) -> None:
     """Overwrite-publish a JSON metadata file atomically: write a
     dot-hidden temp file in the SAME directory (never listed by a
@@ -80,18 +92,11 @@ def atomic_json_dump(obj, path: str) -> None:
     readers or an unparseable ledger that bricks future commits (the
     one filesystem assumption: same-dir rename is atomic on POSIX).
 
-    Manifest chains do not call this directly: every `{prefix}-v{N}.
-    json` goes through `sources.vlog.VersionedLog`, whose `write` is
-    this overwrite and whose `publish` is `atomic_json_publish_once`.
-    The lanes still on the overwrite are the single-writer ones whose
-    crash-recovery contract is "a rerun rewrites the same version":
-    the scripted lifecycle builders (`mor_cdc_init`, non-exclusive
-    `mor_cdc_commit` / `_zm_append`, the COW/MOR-on-COW writers,
-    `timetravel.write_version`), the index lanes (a swap re-stamps
-    the version it just built) and the view refreshes (cursor and
-    catalog stamps rewrite a refresh in place) — a CAS would refuse
-    every one of those reruns.  Ledgers and other single files
-    (epoch ledger, rollup compaction manifest) call this directly."""
+    Only single mutable files that are not version chains call this
+    (epoch ledgers, the rollup compaction manifest, a zone-mapped
+    table's `manifest.json` and `bloom.json`).  A `{prefix}-v{N}.json`
+    version is never overwritten: it comes into existence once, via
+    `atomic_json_publish_once`."""
     import json as _json
     import tempfile as _tempfile
 
@@ -123,10 +128,9 @@ def atomic_json_publish_once(obj, path: str) -> None:
     `VersionedLog.publish` is the only caller in the package: it
     resolves this function through the module at call time (tests
     patch it as the race-window seam) and turns FileExistsError into
-    `CommitConflictError`.  Every multi-writer commit uses it:
-    exclusive MOR commits (`MorCdcSink`), WAP branch staging and
-    publish, schema evolutions and compactions on both lanes,
-    exclusive COW appends and catalog transactions."""
+    `CommitConflictError`.  Every version of every manifest chain —
+    table, WAP branch, view, catalog, time-travel, index and vacuum
+    record — is created through it."""
     import json as _json
     import tempfile as _tempfile
 

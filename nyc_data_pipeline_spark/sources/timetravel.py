@@ -41,8 +41,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .scans import scratch_dir
-from .vlog import VersionedLog
+from .scans import build_from_empty, scratch_dir
+from .vlog import Staging, VersionedLog
 
 TT_PARTS = 4  # partitions: o_orderkey % TT_PARTS
 TT_DEL_MOD = 97  # v2 deletes bucket-0 rows with o_orderkey % 97 == 0
@@ -87,27 +87,29 @@ def resolve_version_as_of(table_dir: str, ts_us: int) -> int:
 def write_version(df: DataFrame, table_dir: str, version: int,
                   parts: list[int], prev_manifest: dict | None) -> dict:
     """Commit `df`'s rows for the named partitions as version
-    `version`: write ONLY those partitions' files under v{version}/,
-    then publish a manifest mapping every partition to its owning
+    `version`: write ONLY those partitions' files under a staged
+    `v{version}-{token}/`, then publish a manifest mapping every
+    partition to its owning
     version directory (untouched partitions inherit from the previous
     manifest).  The manifest records the commit wall-clock (strictly
     increasing per table) for `TIMESTAMP AS OF` resolution.  Returns
     the new manifest dict."""
-    vdir = os.path.join(table_dir, f"v{version}")
-    (
-        df.filter(F.col("pb").isin(parts))
-        .write.mode("overwrite")
-        .partitionBy("pb")
-        .parquet(vdir)
-    )
-    manifest = dict(prev_manifest or {})
-    for p in parts:
-        manifest[str(p)] = os.path.join(vdir, f"pb={p}")
-    prev_ts = (prev_manifest or {}).get(COMMITTED_AT_KEY)
-    manifest[COMMITTED_AT_KEY] = commit_wallclock_us(
-        int(prev_ts) if prev_ts is not None else None
-    )
-    VersionedLog(table_dir).write(manifest, version)
+    with Staging(table_dir, version) as st:
+        vdir = st.path()
+        (
+            df.filter(F.col("pb").isin(parts))
+            .write.mode("overwrite")
+            .partitionBy("pb")
+            .parquet(vdir)
+        )
+        manifest = dict(prev_manifest or {})
+        for p in parts:
+            manifest[str(p)] = os.path.join(vdir, f"pb={p}")
+        prev_ts = (prev_manifest or {}).get(COMMITTED_AT_KEY)
+        manifest[COMMITTED_AT_KEY] = commit_wallclock_us(
+            int(prev_ts) if prev_ts is not None else None
+        )
+        VersionedLog(table_dir).publish(manifest, version)
     return manifest
 
 
@@ -167,6 +169,7 @@ def src_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers reproducing after the v2 commit is snapshot isolation,
     hash-checked."""
     table_dir = scratch_dir("timetravel", sf_dir)
+    build_from_empty(table_dir)
     base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents",
@@ -241,7 +244,7 @@ def src_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise `TimeTravelRetentionError` (property-tested)."""
     table_dir = scratch_dir("timetravel_ts", sf_dir)
     log = VersionedLog(table_dir)
-    if not os.path.exists(log.path(2)):
+    if build_from_empty(table_dir, log.path(2)):
         base = load_table(spark, sf_dir, "orders").selectExpr(
             "o_orderkey",
             "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents",

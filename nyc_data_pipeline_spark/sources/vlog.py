@@ -10,14 +10,13 @@ version is listed, loaded, published and expired is decided once:
 
 - `versions` parses names with a FULLMATCH — a branch named `verify`
   stages `manifest-verify-v3.json`, which must never parse as main;
-- `publish` is the compare-and-swap commit (link(2) from a writer-
-  unique temp name: exactly one writer per version wins, every loser
-  gets the named `CommitConflictError`) — Delta Lake's log commit on
-  plain files;
-- `write` is the overwrite publish (atomic replace).  The single-
-  writer lifecycle builders, index lanes and view refreshes use it:
-  their crash-recovery contract is that a rerun rewrites the same
-  version, which a CAS would refuse;
+- `publish` is the ONLY way a version comes into existence: a
+  compare-and-swap (link(2) from a writer-unique temp name — exactly
+  one writer per version wins, every loser gets the named
+  `CommitConflictError`), Delta Lake's put-if-absent log commit on
+  plain files.  A version is never rewritten;
+- `Staging` names the directories a commit writes before it
+  publishes and removes them if the commit fails;
 - `expire` drops manifests below the retained window and `sweep`
   deletes the staged directories no retained manifest reaches.
 
@@ -30,6 +29,7 @@ import json
 import os
 import re
 import shutil
+import uuid
 
 # the CAS publish resolves through the MODULE at call time — tests
 # patch scans.atomic_json_publish_once as the deterministic race-window
@@ -40,16 +40,17 @@ from . import scans as _scans
 class CommitConflictError(RuntimeError):
     """Two writers raced the same manifest version and this one lost.
 
-    An exclusive commit stages its artifacts under writer-unique
-    directory names (`v{N}-{token}`, `dv-v{N}-{token}`), then publishes
-    its manifest through `VersionedLog.publish`: atomic, and EEXIST if
-    another writer landed N first.  Exactly one writer per version
+    Every commit stages its artifacts under writer-unique directory
+    names (`Staging`), then publishes its manifest through
+    `VersionedLog.publish`: atomic, and EEXIST if another writer
+    landed N first.  Exactly one writer per version
     wins; every loser gets this error and must RETRY FROM A FRESH READ
     (re-derive N from the advanced chain and restage — `MorCdcSink`
     does this automatically).  A pre-check raises it too when the
-    target version is already visible, saving the stage work.  Loser
-    or crashed stage directories are unreferenced by any manifest and
-    are reclaimed by the lane vacuum's `sweep`."""
+    target version is already visible, saving the stage work.  A
+    loser's staged directories are removed by `Staging`; a crashed
+    writer's are unreferenced by any manifest and are reclaimed by the
+    lane vacuum's `sweep`."""
 
 
 # legal WAP branch names (a name like `v3` is refused by the branch
@@ -144,10 +145,6 @@ class VersionedLog:
                 "concurrent writer; retry from a fresh read"
             ) from None
 
-    def write(self, obj: dict, v: int) -> None:
-        """Overwrite publish of version `v` (atomic replace)."""
-        _scans.atomic_json_dump(obj, self.path(v))
-
     def expire(
         self, retain: int, floor: int | None = None,
         head: int | None = None,
@@ -209,10 +206,48 @@ class VersionedLog:
         return max(eligible)[1]
 
 
-# a staged directory: `v{N}`, `dv-v{N}`, `dv-floor-v{N}`, each with an
-# optional writer-unique `-{token}` suffix
-DATA_DIR_RE = r"v(\d+)(?:-[0-9a-f]+)?"
-DV_DIR_RE = r"dv-(?:floor-)?v(\d+)(?:-[0-9a-f]+)?"
+# a staged directory: `v{N}`, `dv-v{N}` or `dv-floor-v{N}` plus the
+# `-{token}` a `Staging` mints (`{hex8}` or `{branch}-{hex8}`); older
+# chains may hold the bare names
+_TOKEN_RE = rf"(?:-(?:{BRANCH_NAME_RE}-)?[0-9a-f]+)?"
+DATA_DIR_RE = r"v(\d+)" + _TOKEN_RE
+DV_DIR_RE = r"dv-(?:floor-)?v(\d+)" + _TOKEN_RE
+
+
+def staged_version(name: str) -> int | None:
+    """The version a data directory named `name` was staged for, or
+    None when `name` is not one."""
+    m = re.fullmatch(DATA_DIR_RE, name)
+    return int(m.group(1)) if m else None
+
+
+class Staging:
+    """The staged directories of ONE commit of version `v` in `dir`:
+    `path(kind)` names `{kind}v{N}-{token}` (kind '', 'dv-' or
+    'dv-floor-') with a token unique to this writer, prefixed with
+    `branch` on a WAP branch.  Wrapped around the whole commit, it
+    removes every directory it named if anything inside raises — a
+    lost CAS, a validation error, a Spark failure."""
+
+    def __init__(self, dir: str, v: int, branch: str | None = None):
+        token = uuid.uuid4().hex[:8]
+        if branch is not None:
+            token = f"{branch}-{token}"
+        self.dir, self._name = dir, f"v{int(v)}-{token}"
+        self._paths: list[str] = []
+
+    def path(self, kind: str = "") -> str:
+        p = os.path.join(self.dir, kind + self._name)
+        self._paths.append(p)
+        return p
+
+    def __enter__(self) -> Staging:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None:
+            for p in self._paths:
+                shutil.rmtree(p, ignore_errors=True)
 
 
 def sweep(

@@ -50,8 +50,20 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-from .scans import atomic_json_dump, field_id_hwm, scratch_dir
-from .vlog import DATA_DIR_RE, CommitConflictError, VersionedLog, sweep
+from .scans import (
+    atomic_json_dump,
+    build_from_empty,
+    field_id_hwm,
+    scratch_dir,
+)
+from .vlog import (
+    DATA_DIR_RE,
+    CommitConflictError,
+    Staging,
+    VersionedLog,
+    staged_version,
+    sweep,
+)
 
 
 def _read_json_table(path: str) -> list[dict]:
@@ -553,9 +565,10 @@ def _zm_versioned_write(
     prev: dict | None, bounds: tuple[int, int],
     cluster_col: str | None = None, collect_stats: bool = False,
 ) -> dict:
-    """Write `b`'s rows for the `touched` buckets under v{version}/ and
-    publish manifest-v{version}.json: touched buckets point at the new
-    files, untouched inherit the previous manifest's paths.  A touched
+    """Write `b`'s rows for the `touched` buckets under a staged
+    `v{version}-{token}/` and publish manifest-v{version}.json: touched
+    buckets point at the new files, untouched inherit the previous
+    manifest's paths.  A touched
     bucket that wrote NO rows (empty range bucket, or a merge that
     deleted a file's last row) gets no manifest entry at all — the
     manifest lists files that exist, so `files_total` is the real file
@@ -572,112 +585,112 @@ def _zm_versioned_write(
     (`file_stats`, path-keyed) plus the column's field id
     (`cluster_field`) — zone-map file skipping that survives renaming
     the cluster column, because the id never changes."""
-    vdir = os.path.join(table_dir, f"v{version}")
-    (
-        b.filter(F.col("zb").isin([int(z) for z in touched]))
-        .repartition(F.col("zb"))
-        .write.mode("overwrite")
-        .partitionBy("zb")
-        .parquet(vdir)
-    )
-    files = dict((prev or {}).get("files", {}))
-    for z in touched:
-        if os.path.isdir(os.path.join(vdir, f"zb={z}")):
-            files[str(z)] = os.path.join(vdir, f"zb={z}")
-        else:
-            files.pop(str(z), None)  # bucket empty in this version
-    from .timetravel import commit_wallclock_us
-
-    manifest = {
-        "files": files,
-        "bounds": list(bounds),
-        "version": version,
-        "committed_at_us": commit_wallclock_us(
-            (prev or {}).get("committed_at_us")
-        ),
-    }
-    dtypes = {c: t for c, t in b.dtypes if c != "zb"}
-    if prev is None:
-        schema = [
-            {"id": i + 1, "name": c, "type": t}
-            for i, (c, t) in enumerate(dtypes.items())
-        ]
-    else:
-        schema = prev.get("schema")  # None = legacy chain, stays so
-        if schema is not None:
-            # stale-producer guard (see _zm_append): columns outside
-            # the current schema fail loudly instead of silently
-            # shearing into un-projected files
-            names = {f["name"] for f in schema}
-            stray = [c for c in dtypes if c not in names]
-            if stray:
-                raise ValueError(
-                    f"write columns {stray} are not in {table_dir}'s "
-                    f"current schema {sorted(names)}; the producer is "
-                    "writing a stale schema (or add the column first "
-                    "via cow_add_column)"
-                )
-    if schema is not None:
-
-        manifest["schema"] = schema
-        # id high-water mark: stamped at birth, carried (never
-        # lowered) on every later commit — see field_id_hwm
-        manifest["last_field_id"] = (
-            max((f["id"] for f in schema), default=0)
-            if prev is None
-            else field_id_hwm(prev)
+    with Staging(table_dir, version) as st:
+        vdir = st.path()
+        (
+            b.filter(F.col("zb").isin([int(z) for z in touched]))
+            .repartition(F.col("zb"))
+            .write.mode("overwrite")
+            .partitionBy("zb")
+            .parquet(vdir)
         )
-        manifest["commit_cols"] = {
-            **(prev or {}).get("commit_cols", {}),
-            str(version): {str(f["id"]): f["name"] for f in schema},
+        files = dict((prev or {}).get("files", {}))
+        for z in touched:
+            if os.path.isdir(os.path.join(vdir, f"zb={z}")):
+                files[str(z)] = os.path.join(vdir, f"zb={z}")
+            else:
+                files.pop(str(z), None)  # bucket empty in this version
+        from .timetravel import commit_wallclock_us
+
+        manifest = {
+            "files": files,
+            "bounds": list(bounds),
+            "version": version,
+            "committed_at_us": commit_wallclock_us(
+                (prev or {}).get("committed_at_us")
+            ),
         }
-        if cluster_col is not None and prev is None:
-            manifest["cluster_field"] = next(
-                f["id"] for f in schema if f["name"] == cluster_col
+        dtypes = {c: t for c, t in b.dtypes if c != "zb"}
+        if prev is None:
+            schema = [
+                {"id": i + 1, "name": c, "type": t}
+                for i, (c, t) in enumerate(dtypes.items())
+            ]
+        else:
+            schema = prev.get("schema")  # None = legacy chain, stays so
+            if schema is not None:
+                # stale-producer guard (see _zm_append): columns outside
+                # the current schema fail loudly instead of silently
+                # shearing into un-projected files
+                names = {f["name"] for f in schema}
+                stray = [c for c in dtypes if c not in names]
+                if stray:
+                    raise ValueError(
+                        f"write columns {stray} are not in {table_dir}'s "
+                        f"current schema {sorted(names)}; the producer is "
+                        "writing a stale schema (or add the column first "
+                        "via cow_add_column)"
+                    )
+        if schema is not None:
+            manifest["schema"] = schema
+            # id high-water mark: stamped at birth, carried (never
+            # lowered) on every later commit — see field_id_hwm
+            manifest["last_field_id"] = (
+                max((f["id"] for f in schema), default=0)
+                if prev is None
+                else field_id_hwm(prev)
             )
-        elif (prev or {}).get("cluster_field") is not None:
-            manifest["cluster_field"] = prev["cluster_field"]
-    cf = (
-        cluster_col
-        if cluster_col is not None
-        else _cluster_col_now(prev)
-    )
-    # Per-file stats are OPT-IN (collect_stats at chain birth; later
-    # commits follow the chain): the extra agg is one pass over the
-    # written batch — the standard Iceberg stats-collection cost —
-    # which chains that never take the pruned-read path (their
-    # candidate selection runs in Spark) should not pay.  The
-    # cluster_field POINTER is free and always stamped, so
-    # change_feed_from's value-column rule and id-resolved append
-    # routing work on every declared chain.
-    if cf is not None and not (
-        collect_stats or (prev or {}).get("file_stats") is not None
-    ):
-        cf = None
-    if cf is not None:
-        # per-file stats of the written files (executor-side agg,
-        # bucket-fan-out-bounded collect); inherited entries keep
-        # their stats from the previous manifest
-        stats = {
-            str(r["zb"]): [r["lo"], r["hi"]]
-            for r in b.filter(
-                F.col("zb").isin([int(z) for z in touched])
-            )
-            .groupBy("zb")
-            .agg(F.min(cf).alias("lo"), F.max(cf).alias("hi"))
-            .collect()
-        }
-        prev_fs = (prev or {}).get("file_stats", {})
-        manifest["file_stats"] = {
-            p: (
-                stats[z]
-                if p.startswith(vdir + os.sep) and z in stats
-                else prev_fs.get(p)
-            )
-            for z, path in files.items()
-            for p in (path if isinstance(path, list) else [path])
-        }
-    VersionedLog(table_dir).write(manifest, version)
+            manifest["commit_cols"] = {
+                **(prev or {}).get("commit_cols", {}),
+                str(version): {str(f["id"]): f["name"] for f in schema},
+            }
+            if cluster_col is not None and prev is None:
+                manifest["cluster_field"] = next(
+                    f["id"] for f in schema if f["name"] == cluster_col
+                )
+            elif (prev or {}).get("cluster_field") is not None:
+                manifest["cluster_field"] = prev["cluster_field"]
+        cf = (
+            cluster_col
+            if cluster_col is not None
+            else _cluster_col_now(prev)
+        )
+        # Per-file stats are OPT-IN (collect_stats at chain birth; later
+        # commits follow the chain): the extra agg is one pass over the
+        # written batch — the standard Iceberg stats-collection cost —
+        # which chains that never take the pruned-read path (their
+        # candidate selection runs in Spark) should not pay.  The
+        # cluster_field POINTER is free and always stamped, so
+        # change_feed_from's value-column rule and id-resolved append
+        # routing work on every declared chain.
+        if cf is not None and not (
+            collect_stats or (prev or {}).get("file_stats") is not None
+        ):
+            cf = None
+        if cf is not None:
+            # per-file stats of the written files (executor-side agg,
+            # bucket-fan-out-bounded collect); inherited entries keep
+            # their stats from the previous manifest
+            stats = {
+                str(r["zb"]): [r["lo"], r["hi"]]
+                for r in b.filter(
+                    F.col("zb").isin([int(z) for z in touched])
+                )
+                .groupBy("zb")
+                .agg(F.min(cf).alias("lo"), F.max(cf).alias("hi"))
+                .collect()
+            }
+            prev_fs = (prev or {}).get("file_stats", {})
+            manifest["file_stats"] = {
+                p: (
+                    stats[z]
+                    if p.startswith(vdir + os.sep) and z in stats
+                    else prev_fs.get(p)
+                )
+                for z, path in files.items()
+                for p in (path if isinstance(path, list) else [path])
+            }
+        VersionedLog(table_dir).publish(manifest, version)
     return manifest
 
 
@@ -731,14 +744,8 @@ def _grouped_manifest_scan(
             # keyed by the v{N} dir name), then aliased/cast to the
             # schema's CURRENT name/type — renames and widens are
             # metadata-only here too
-            # version dirs are v{N} or the writer-unique v{N}-{token}
-            # a CAS'd compaction stages under — both parse to N
-            import re as _re
-
-            mm = _re.fullmatch(
-                r"v(\d+)(?:-[0-9a-f]+)?", os.path.basename(vdir)
-            )
-            stored = commit_cols.get(mm.group(1)) if mm else None
+            n = staged_version(os.path.basename(vdir))
+            stored = commit_cols.get(str(n)) if n is not None else None
             cols = []
             for fld in schema:
                 sn = (
@@ -898,9 +905,9 @@ def merge_zone_map_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH manifest versions back — v1 totals reproducing after the v2
     commit is snapshot isolation at file granularity, and
     files_rewritten records the copy-on-write economy."""
-    return cow_merge(
-        spark, _orders_kcd(spark, sf_dir), scratch_dir("zm_merge", sf_dir)
-    )
+    table_dir = scratch_dir("zm_merge", sf_dir)
+    build_from_empty(table_dir)
+    return cow_merge(spark, _orders_kcd(spark, sf_dir), table_dir)
 
 
 # --- Change data feed: version diff reading only rewritten files -----------
@@ -1132,39 +1139,27 @@ MRG_APP_MOD, MRG_APP_KEY = 499, 2 * 10**12  # append batch: k%499, re-keyed
 
 def _zm_append(
     spark: SparkSession, batch: DataFrame, table_dir: str, version: int,
-    n_files: int = ZM_FILES, exclusive: bool = False,
+    n_files: int = ZM_FILES,
 ) -> dict:
     """Append `batch` (k, cents, day) to the committed v{version-1}:
     route rows under the FROZEN manifest bounds, write one new file per
-    touched bucket under v{version}/, publish manifest-v{version} whose
-    per-bucket file LISTS inherit every previous entry.
+    touched bucket under a staged `v{version}-{token}/`, publish
+    manifest-v{version} whose per-bucket file LISTS inherit every
+    previous entry.
 
-    `exclusive=True` is the CONCURRENT-writer mode (the mor_cdc_commit
-    rule on this lane, VERDICT r14 ask #5): files stage under a
-    writer-unique directory and the manifest publishes through the
-    link(2) CAS, so an append racing an evolution or compaction for
-    the same next version resolves to ONE winner — the loser removes
-    its staged directory and raises the named CommitConflictError,
-    never a silent clobber.  The default non-exclusive path keeps
-    overwrite-idempotent publishes for single-writer lifecycle
-    rebuilds (crash-recovery contract: rerun rewrites the same
-    version)."""
+    The publish is the link(2) CAS (the mor_cdc_commit rule on this
+    lane, VERDICT r14 ask #5): an append racing an evolution or
+    compaction for the same next version resolves to ONE winner — the
+    loser's staged directory is removed and it raises the named
+    CommitConflictError, never a silent clobber."""
     log = VersionedLog(table_dir)
-    if exclusive and os.path.exists(log.path(version)):
+    if os.path.exists(log.path(version)):
         raise CommitConflictError(
             f"manifest v{version} of {table_dir} already published by "
             "another writer; retry from a fresh read"
         )
     prev = log.load(version - 1)
     lo, hi = prev["bounds"]
-    if exclusive:
-        import uuid
-
-        vdir = os.path.join(
-            table_dir, f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
-    else:
-        vdir = os.path.join(table_dir, f"v{version}")
     # the batch routes on the cluster column's CURRENT name (field-id
     # resolved — a renamed cluster column keeps routing)
     cf = _cluster_col_now(prev) or "day"
@@ -1197,72 +1192,64 @@ def _zm_append(
             ),
         ),
     )
-    (
-        routed.repartition(F.col("zb"))
-        .write.mode("overwrite")
-        .partitionBy("zb")
-        .parquet(vdir)
-    )
-    appended = sorted(
-        str(r["zb"])
-        for r in routed.select("zb").distinct().collect()
-    )
-    # per-bucket file LISTS: inherited entries + this commit's files
-    files = {
-        z: (paths if isinstance(paths, list) else [paths])
-        for z, paths in prev["files"].items()
-    }
-    for z in appended:
-        files.setdefault(z, []).append(os.path.join(vdir, f"zb={z}"))
-    from .timetravel import commit_wallclock_us
-
-    manifest = {
-        "files": files,
-        "bounds": [lo, hi],
-        "version": version,
-        "appended_buckets": appended,
-        "committed_at_us": commit_wallclock_us(
-            prev.get("committed_at_us")
-        ),
-    }
-    if prev.get("schema") is not None:
-
-        # appends write the full current schema: carry ids, stamp
-        # this commit's name map (the _zm_versioned_write rule)
-        manifest["schema"] = prev["schema"]
-        manifest["last_field_id"] = field_id_hwm(prev)
-        manifest["commit_cols"] = {
-            **prev.get("commit_cols", {}),
-            str(version): {
-                str(f["id"]): f["name"] for f in prev["schema"]
-            },
+    with Staging(table_dir, version) as st:
+        vdir = st.path()
+        (
+            routed.repartition(F.col("zb"))
+            .write.mode("overwrite")
+            .partitionBy("zb")
+            .parquet(vdir)
+        )
+        appended = sorted(
+            str(r["zb"])
+            for r in routed.select("zb").distinct().collect()
+        )
+        # per-bucket file LISTS: inherited entries + this commit's files
+        files = {
+            z: (paths if isinstance(paths, list) else [paths])
+            for z, paths in prev["files"].items()
         }
-        if prev.get("cluster_field") is not None:
-            manifest["cluster_field"] = prev["cluster_field"]
-    if prev.get("file_stats") is not None:
-        stats = {
-            str(r["zb"]): [r["lo"], r["hi"]]
-            for r in routed.groupBy("zb")
-            .agg(F.min(cf).alias("lo"), F.max(cf).alias("hi"))
-            .collect()
-        }
-        manifest["file_stats"] = {
-            **prev["file_stats"],
-            **{
-                os.path.join(vdir, f"zb={z}"): stats[z]
-                for z in appended
-            },
-        }
-    if exclusive:
-        try:
-            log.publish(manifest, version)
-        except CommitConflictError:
-            import shutil
+        for z in appended:
+            files.setdefault(z, []).append(os.path.join(vdir, f"zb={z}"))
+        from .timetravel import commit_wallclock_us
 
-            shutil.rmtree(vdir, ignore_errors=True)
-            raise
-    else:
-        log.write(manifest, version)
+        manifest = {
+            "files": files,
+            "bounds": [lo, hi],
+            "version": version,
+            "appended_buckets": appended,
+            "committed_at_us": commit_wallclock_us(
+                prev.get("committed_at_us")
+            ),
+        }
+        if prev.get("schema") is not None:
+            # appends write the full current schema: carry ids, stamp
+            # this commit's name map (the _zm_versioned_write rule)
+            manifest["schema"] = prev["schema"]
+            manifest["last_field_id"] = field_id_hwm(prev)
+            manifest["commit_cols"] = {
+                **prev.get("commit_cols", {}),
+                str(version): {
+                    str(f["id"]): f["name"] for f in prev["schema"]
+                },
+            }
+            if prev.get("cluster_field") is not None:
+                manifest["cluster_field"] = prev["cluster_field"]
+        if prev.get("file_stats") is not None:
+            stats = {
+                str(r["zb"]): [r["lo"], r["hi"]]
+                for r in routed.groupBy("zb")
+                .agg(F.min(cf).alias("lo"), F.max(cf).alias("hi"))
+                .collect()
+            }
+            manifest["file_stats"] = {
+                **prev["file_stats"],
+                **{
+                    os.path.join(vdir, f"zb={z}"): stats[z]
+                    for z in appended
+                },
+            }
+        log.publish(manifest, version)
     return manifest
 
 
@@ -1297,20 +1284,24 @@ def src_zone_map_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest — per-bucket totals plus the appended-row evidence.  The
     oracle recomputes v2's merge algebra AND the append routing, so
     inheritance (no v2 row lost, none changed) and the frozen-bounds
-    file routing are both hash-checked."""
+    file routing are both hash-checked.  A published v3 is REUSED
+    (the src_cow_change_feed rule): a version is committed once."""
     table_dir = scratch_dir("zm_merge", sf_dir)
-    if not os.path.exists(VersionedLog(table_dir).path(2)):
-        merge_zone_map_cow(spark, sf_dir).collect()
-    batch = (
-        _orders_kcd(spark, sf_dir)
-        .filter(F.col("k") % MRG_APP_MOD == 0)
-        .select(
-            (F.col("k") + MRG_APP_KEY).alias("k"),
-            (F.col("cents") + 2).alias("cents"),
-            "day",
+    log = VersionedLog(table_dir)
+    if not os.path.exists(log.path(3)):
+        if not os.path.exists(log.path(2)):
+            merge_zone_map_cow(spark, sf_dir).collect()
+        batch = (
+            _orders_kcd(spark, sf_dir)
+            .filter(F.col("k") % MRG_APP_MOD == 0)
+            .select(
+                (F.col("k") + MRG_APP_KEY).alias("k"),
+                (F.col("cents") + 2).alias("cents"),
+                "day",
+            )
         )
-    )
-    m3 = _zm_append(spark, batch, table_dir, 3)
+        _zm_append(spark, batch, table_dir, 3)
+    m3 = log.load(3)
     out = (
         _grouped_manifest_scan(spark, m3["files"])
         .select("k", "cents", "zb")
@@ -1446,6 +1437,7 @@ def src_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     database_handler.py:167-180-style store would run via B-tree range
     scans, re-expressed as manifest-pruned file rewrites."""
     table_dir = scratch_dir("zm_delete", sf_dir)
+    build_from_empty(table_dir)
     return cow_delete(spark, _orders_kcd(spark, sf_dir), table_dir)
 
 
@@ -1465,7 +1457,7 @@ def manifest_vacuum(table_dir: str, latest: int) -> dict:
     O(#files), independent of data volume.
 
     Directories staged for a version NEWER than `latest` are never
-    collected: an exclusive append/compaction in flight stages its
+    collected: an append/compaction in flight stages its
     `v{{N}}-{{token}}` files BEFORE its manifest CAS, so between the
     two a reachability sweep would see unreferenced dirs whose delete
     turns the writer's subsequent successful publish into a manifest
@@ -1537,26 +1529,20 @@ def src_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     after) from the raw rows alone."""
     table_dir = scratch_dir("zm_vacuum", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(VersionedLog(table_dir).path(3)):
-        if not os.path.exists(
-            VersionedLog(table_dir).path(2)
-        ):
-            cow_merge(spark, base, table_dir).collect()
+    # idempotent re-run: the vacuum record IS the commit — a second
+    # invocation reports the recorded reclamation, it does not vacuum
+    # an already-vacuumed table into different numbers.
+    record = VersionedLog(table_dir, "vacuum")
+    if build_from_empty(table_dir, record.path(3)):
+        cow_merge(spark, base, table_dir).collect()
         batch = base.filter(F.col("k") % MRG_APP_MOD == 0).select(
             (F.col("k") + MRG_APP_KEY).alias("k"),
             (F.col("cents") + 2).alias("cents"),
             "day",
         )
         _zm_append(spark, batch, table_dir, 3)
-    # idempotent re-run: the vacuum record IS the commit — a second
-    # invocation reports the recorded reclamation, it does not vacuum
-    # an already-vacuumed table into different numbers.
-    record = VersionedLog(table_dir, "vacuum")
-    if os.path.exists(record.path(3)):
-        stats = record.load(3)
-    else:
-        stats = manifest_vacuum(table_dir, latest=3)
-        record.write(stats, 3)
+        record.publish(manifest_vacuum(table_dir, latest=3), 3)
+    stats = record.load(3)
     out = None
     for version in (2, 3):
         piece = (
@@ -1722,7 +1708,7 @@ def src_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mor_delete_commit(
     spark: SparkSession, table_dir: str, m1: dict,
 ) -> dict:
-    """Write dv-v2: per-bucket deleted-key lists (executor-side JSON
+    """Stage dv-v2: per-bucket deleted-key lists (executor-side JSON
     lines — the manifest_files discipline) for the stats-overlapping
     buckets only; manifest-v2 keeps EVERY v1 data file and points at
     the sidecar.  Candidate selection is ONE Spark aggregate over the
@@ -1742,30 +1728,31 @@ def _mor_delete_commit(
     tdf = _grouped_manifest_scan(
         spark, {z: p for z, p in m1["files"].items() if z in touched}
     )
-    dv_dir = os.path.join(table_dir, "dv-v2")
-    in_slice = F.col("day").between(DEL_LO_DAY, DEL_HI_DAY)
-    (
-        tdf.filter(in_slice & (F.col("k") % DEL_MOD == 0))
-        .select("zb", "k")
-        .write.mode("overwrite")
-        .json(dv_dir)
-    )
-    dv_buckets = sorted(
-        {str(r["zb"]) for r in _read_json_table(dv_dir)}
-    )
-    from .timetravel import commit_wallclock_us
+    with Staging(table_dir, 2) as st:
+        dv_dir = st.path("dv-")
+        in_slice = F.col("day").between(DEL_LO_DAY, DEL_HI_DAY)
+        (
+            tdf.filter(in_slice & (F.col("k") % DEL_MOD == 0))
+            .select("zb", "k")
+            .write.mode("overwrite")
+            .json(dv_dir)
+        )
+        dv_buckets = sorted(
+            {str(r["zb"]) for r in _read_json_table(dv_dir)}
+        )
+        from .timetravel import commit_wallclock_us
 
-    manifest = {
-        "files": dict(m1["files"]),
-        "bounds": m1["bounds"],
-        "version": 2,
-        "delete_vectors": dv_dir,
-        "dv_buckets": dv_buckets,
-        "committed_at_us": commit_wallclock_us(
-            m1.get("committed_at_us")
-        ),
-    }
-    VersionedLog(table_dir).write(manifest, 2)
+        manifest = {
+            "files": dict(m1["files"]),
+            "bounds": m1["bounds"],
+            "version": 2,
+            "delete_vectors": dv_dir,
+            "dv_buckets": dv_buckets,
+            "committed_at_us": commit_wallclock_us(
+                m1.get("committed_at_us")
+            ),
+        }
+        VersionedLog(table_dir).publish(manifest, 2)
     return manifest
 
 
@@ -1929,28 +1916,29 @@ def src_mor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 piece if compacted is None
                 else compacted.unionByName(piece)
             )
-        vdir = os.path.join(table_dir, "v3")
-        (
-            compacted.repartition(F.col("zb"))
-            .write.mode("overwrite")
-            .partitionBy("zb")
-            .parquet(vdir)
-        )
-        files = dict(m2["files"])
-        for z in m2["dv_buckets"]:
-            files[z] = os.path.join(vdir, f"zb={z}")
-        from .timetravel import commit_wallclock_us
+        with Staging(table_dir, 3) as st:
+            vdir = st.path()
+            (
+                compacted.repartition(F.col("zb"))
+                .write.mode("overwrite")
+                .partitionBy("zb")
+                .parquet(vdir)
+            )
+            files = dict(m2["files"])
+            for z in m2["dv_buckets"]:
+                files[z] = os.path.join(vdir, f"zb={z}")
+            from .timetravel import commit_wallclock_us
 
-        m3 = {
-            "files": files,
-            "bounds": m2["bounds"],
-            "version": 3,
-            "compacted_buckets": m2["dv_buckets"],
-            "committed_at_us": commit_wallclock_us(
-                m2.get("committed_at_us")
-            ),
-        }
-        VersionedLog(table_dir).write(m3, 3)
+            m3 = {
+                "files": files,
+                "bounds": m2["bounds"],
+                "version": 3,
+                "compacted_buckets": m2["dv_buckets"],
+                "committed_at_us": commit_wallclock_us(
+                    m2.get("committed_at_us")
+                ),
+            }
+            VersionedLog(table_dir).publish(m3, 3)
     else:
         m3 = VersionedLog(table_dir).load(3)
     return (
@@ -2204,85 +2192,80 @@ def cow_compact(
     mor_cdc_compact rule) — after one compaction, rename/widen work.
     `cluster_col` is only consulted when adopting (id chains resolve
     the cluster column through `cluster_field`)."""
-    import shutil
-    import uuid
-
     version = _cow_latest_version(table_dir)
     m = VersionedLog(table_dir).load(version)
     live = _zm_read_version(spark, table_dir, version)
     vnew = version + 1
-    # writer-unique staged name + CAS publish (VERDICT r13 ask #6,
-    # the mor_cdc_compact rule): one winner per maintenance version
-    token = uuid.uuid4().hex[:8]
-    vdir = os.path.join(table_dir, f"v{vnew}-{token}")
-    (
-        live.repartition(F.col("zb"))
-        .write.mode("overwrite")
-        .partitionBy("zb")
-        .parquet(vdir)
-    )
-    files = {
-        z[len("zb="):]: os.path.join(vdir, z)
-        for z in os.listdir(vdir)
-        if z.startswith("zb=")
-    }
-    from .timetravel import commit_wallclock_us
-
-    manifest = {
-        "files": files,
-        "bounds": m["bounds"],
-        "version": vnew,
-        "compacted_from": version,
-        "committed_at_us": commit_wallclock_us(
-            m.get("committed_at_us")
-        ),
-    }
-
-    if m.get("schema") is not None:
-        schema = m["schema"]
-        manifest["cluster_field"] = m.get("cluster_field")
-        # pin the id high-water mark: this commit resets commit_cols
-        # (the derive-from-history fallback), so without the persisted
-        # mark a post-compaction drop/re-add could re-issue a
-        # pre-compaction dropped id (the mor_cdc_compact rule)
-        manifest["last_field_id"] = field_id_hwm(m)
-    else:
-        # LEGACY FIELD-ID ADOPTION: fresh ids from the rewritten
-        # frame's materialized names/types
-        dtypes = {c: t for c, t in live.dtypes if c != "zb"}
-        schema = [
-            {"id": i + 1, "name": c, "type": t}
-            for i, (c, t) in enumerate(dtypes.items())
-        ]
-        if cluster_col in dtypes:
-            manifest["cluster_field"] = next(
-                f["id"] for f in schema if f["name"] == cluster_col
-            )
-        manifest["last_field_id"] = max(
-            (f["id"] for f in schema), default=0
-        )
-    manifest["schema"] = schema
-    manifest["commit_cols"] = {
-        str(vnew): {str(f["id"]): f["name"] for f in schema}
-    }
-    cf = _cluster_col_now(manifest) or (
-        cluster_col if cluster_col in dict(live.dtypes) else None
-    )
-    if cf is not None:
-        stats = {
-            str(r["zb"]): [r["lo"], r["hi"]]
-            for r in live.groupBy("zb")
-            .agg(F.min(cf).alias("lo"), F.max(cf).alias("hi"))
-            .collect()
-        }
-        manifest["file_stats"] = {
-            p: stats.get(z) for z, p in files.items()
-        }
-
     try:
-        VersionedLog(table_dir).publish(manifest, vnew)
+        # writer-unique staged name + CAS publish (VERDICT r13 ask #6,
+        # the mor_cdc_compact rule): one winner per maintenance version
+        with Staging(table_dir, vnew) as st:
+            vdir = st.path()
+            (
+                live.repartition(F.col("zb"))
+                .write.mode("overwrite")
+                .partitionBy("zb")
+                .parquet(vdir)
+            )
+            files = {
+                z[len("zb="):]: os.path.join(vdir, z)
+                for z in os.listdir(vdir)
+                if z.startswith("zb=")
+            }
+            from .timetravel import commit_wallclock_us
+
+            manifest = {
+                "files": files,
+                "bounds": m["bounds"],
+                "version": vnew,
+                "compacted_from": version,
+                "committed_at_us": commit_wallclock_us(
+                    m.get("committed_at_us")
+                ),
+            }
+
+            if m.get("schema") is not None:
+                schema = m["schema"]
+                manifest["cluster_field"] = m.get("cluster_field")
+                # pin the id high-water mark: this commit resets commit_cols
+                # (the derive-from-history fallback), so without the persisted
+                # mark a post-compaction drop/re-add could re-issue a
+                # pre-compaction dropped id (the mor_cdc_compact rule)
+                manifest["last_field_id"] = field_id_hwm(m)
+            else:
+                # LEGACY FIELD-ID ADOPTION: fresh ids from the rewritten
+                # frame's materialized names/types
+                dtypes = {c: t for c, t in live.dtypes if c != "zb"}
+                schema = [
+                    {"id": i + 1, "name": c, "type": t}
+                    for i, (c, t) in enumerate(dtypes.items())
+                ]
+                if cluster_col in dtypes:
+                    manifest["cluster_field"] = next(
+                        f["id"] for f in schema if f["name"] == cluster_col
+                    )
+                manifest["last_field_id"] = max(
+                    (f["id"] for f in schema), default=0
+                )
+            manifest["schema"] = schema
+            manifest["commit_cols"] = {
+                str(vnew): {str(f["id"]): f["name"] for f in schema}
+            }
+            cf = _cluster_col_now(manifest) or (
+                cluster_col if cluster_col in dict(live.dtypes) else None
+            )
+            if cf is not None:
+                stats = {
+                    str(r["zb"]): [r["lo"], r["hi"]]
+                    for r in live.groupBy("zb")
+                    .agg(F.min(cf).alias("lo"), F.max(cf).alias("hi"))
+                    .collect()
+                }
+                manifest["file_stats"] = {
+                    p: stats.get(z) for z, p in files.items()
+                }
+            VersionedLog(table_dir).publish(manifest, vnew)
     except CommitConflictError:
-        shutil.rmtree(vdir, ignore_errors=True)
         winner = VersionedLog(table_dir).load(vnew)
         # EQUIVALENCE, not just same source version (ADVICE r14, the
         # mor_cdc_compact rule): the winner must have produced the
@@ -2393,14 +2376,7 @@ def src_cow_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _orders_kcd(spark, sf_dir).withColumn(
         "cents", F.col("cents").cast("int")
     )
-    if not os.path.exists(VersionedLog(table_dir).path(4)):
-        # rerun-safe (ADVICE r14): a crash between the v3 rename and
-        # the v4 widen would otherwise leave partial state whose rerun
-        # hits the evolution CAS (CommitConflictError) — scratch is
-        # pid-scoped, so partial state is OUR dead attempt: rebuild
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    if build_from_empty(table_dir, VersionedLog(table_dir).path(4)):
         lo, hi = base.agg(F.min("day"), F.max("day")).collect()[0]
         b1 = range_buckets(base, "day", ZM_FILES).withColumnRenamed(
             "bucket", "zb"
@@ -2485,13 +2461,7 @@ def src_cow_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
     [GAP] build-out) and the stored values only on post-re-add rows."""
     table_dir = scratch_dir("cow_readd", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(VersionedLog(table_dir).path(6)):
-        # rerun-safe: a crashed partial lifecycle rebuilds from v1
-        # (scratch is pid-scoped; partial state means OUR earlier
-        # attempt died mid-chain — evolution commits are CAS-once)
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    if build_from_empty(table_dir, VersionedLog(table_dir).path(6)):
         lo, hi = base.agg(F.min("day"), F.max("day")).collect()[0]
         b1 = range_buckets(base, "day", ZM_FILES).withColumnRenamed(
             "bucket", "zb"

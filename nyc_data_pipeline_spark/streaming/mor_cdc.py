@@ -68,8 +68,9 @@ spark_consumer.py:106 (blind JDBC append ⇒ duplicate rows); here the
 same redelivery commits nothing and the table converges to the exact
 one-shot merge (oracle-checked by the batch twin below).
 
-Concurrent-writer contract (r12): the production commit path
-(`MorCdcSink`) is a snapshot-CAS on plain files, Iceberg-style.  Each
+Concurrent-writer contract (r12): every commit (`MorCdcSink`, the
+lifecycle builders, evolutions, compactions, WAP branches) is a
+snapshot-CAS on plain files, Iceberg-style.  Each
 writer stages its epoch's artifacts under WRITER-UNIQUE directory
 names (`v{N}-{token}` / `dv-v{N}-{token}` — concurrent stagers never
 share a path), then publishes `manifest-v{N}.json` via link(2) from a
@@ -80,8 +81,9 @@ so two concurrent writers serialize as N and N+1 — never a silent
 last-manifest-write-wins lost commit.  All artifact paths flow to
 readers through the manifest (never reconstructed from version
 arithmetic), staged-but-unpublished directories are invisible to every
-reader and reclaimed by vacuum's reachability sweep, and compaction
-stays single-operator by contract on the non-exclusive path.
+reader and reclaimed by vacuum's reachability sweep.  This is the only
+publish rule: the scripted lifecycle builders commit the same way, and
+a version, once published, is never rewritten.
 Property-tested in tests/test_streaming.py (two interleaved
 committers: every interleaving serializes or raises; the post-race
 table state is exact).
@@ -98,12 +100,18 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-from ..sources.scans import atomic_json_dump, field_id_hwm, scratch_dir
+from ..sources.scans import (
+    atomic_json_dump,
+    build_from_empty,
+    field_id_hwm,
+    scratch_dir,
+)
 from ..sources.vlog import (
     BRANCH_NAME_RE,
     DATA_DIR_RE,
     DV_DIR_RE,
     CommitConflictError,
+    Staging,
     VersionedLog,
     sweep,
 )
@@ -181,59 +189,62 @@ def mor_cdc_init(
     b = range_buckets(base, key, n_files).withColumnRenamed(
         "bucket", "zb"
     ).drop("lo", "hi")
-    vdir = os.path.join(table_dir, "v1")
-    (
-        b.repartition(F.col("zb"))
-        .write.mode("overwrite")
-        .partitionBy("zb")
-        .parquet(vdir)
-    )
-    stats = _zb_stats(b, key)
-    files = {
-        z[len("zb="):]: [
-            {
-                "path": os.path.join(vdir, z),
-                "v": 1,
-                **stats.get(z[len("zb="):], {}),
-            }
-        ]
-        for z in os.listdir(vdir)
-        if z.startswith("zb=")
-    }
     from ..sources.timetravel import commit_wallclock_us
 
-    # Stable FIELD IDS (Iceberg's rule, VERDICT r12 ask #4): every
-    # column gets an id at birth; reads resolve columns BY ID through
-    # the per-commit name map (`commit_cols`), so a rename is
-    # metadata-only (files keep their written names forever), a drop
-    # stops projecting without rewrites, and int->long / float->double
-    # widen on read via the schema's current type.
-    dtypes = dict(b.dtypes)
-    cols = [c for c in b.columns if c != "zb"]
-    schema = [
-        {"id": i + 1, "name": c, "type": dtypes[c]}
-        for i, c in enumerate(cols)
-    ]
-    manifest = {
-        "key": key,
-        "bounds": [int(lo), int(hi)],
-        "n_files": n_files,
-        "version": 1,
-        "files": files,
-        "dvs": [],
-        "columns": cols,
-        "schema": schema,
-        "last_field_id": max((f["id"] for f in schema), default=0),
-        "commit_cols": {"1": {str(f["id"]): f["name"] for f in schema}},
-        "committed_at_us": commit_wallclock_us(None),
-    }
-    VersionedLog(table_dir).write(manifest, 1)
+    with Staging(table_dir, 1) as st:
+        vdir = st.path()
+        (
+            b.repartition(F.col("zb"))
+            .write.mode("overwrite")
+            .partitionBy("zb")
+            .parquet(vdir)
+        )
+        stats = _zb_stats(b, key)
+        files = {
+            z[len("zb="):]: [
+                {
+                    "path": os.path.join(vdir, z),
+                    "v": 1,
+                    **stats.get(z[len("zb="):], {}),
+                }
+            ]
+            for z in os.listdir(vdir)
+            if z.startswith("zb=")
+        }
+        # Stable FIELD IDS (Iceberg's rule, VERDICT r12 ask #4): every
+        # column gets an id at birth; reads resolve columns BY ID
+        # through the per-commit name map (`commit_cols`), so a rename
+        # is metadata-only (files keep their written names forever), a
+        # drop stops projecting without rewrites, and int->long /
+        # float->double widen on read via the schema's current type.
+        dtypes = dict(b.dtypes)
+        cols = [c for c in b.columns if c != "zb"]
+        schema = [
+            {"id": i + 1, "name": c, "type": dtypes[c]}
+            for i, c in enumerate(cols)
+        ]
+        manifest = {
+            "key": key,
+            "bounds": [int(lo), int(hi)],
+            "n_files": n_files,
+            "version": 1,
+            "files": files,
+            "dvs": [],
+            "columns": cols,
+            "schema": schema,
+            "last_field_id": max((f["id"] for f in schema), default=0),
+            "commit_cols": {
+                "1": {str(f["id"]): f["name"] for f in schema}
+            },
+            "committed_at_us": commit_wallclock_us(None),
+        }
+        VersionedLog(table_dir).publish(manifest, 1)
     return manifest
 
 
 def mor_cdc_commit(
     spark: SparkSession, batch: DataFrame, table_dir: str, version: int,
-    n_files: int = MOR_CDC_FILES, exclusive: bool = False,
+    n_files: int = MOR_CDC_FILES,
     _before_publish=None, branch: str | None = None,
 ) -> dict:
     """Commit one CDC epoch merge-on-read.  `batch` is keyed change
@@ -243,33 +254,31 @@ def mor_cdc_commit(
     lower-version copies), and the 'u' rows are appended as new files.
     Nothing is read from or rewritten in existing data files.
 
-    `exclusive=True` is the CONCURRENT-writer mode (see
+    Every commit is safe against concurrent writers (see
     `CommitConflictError`): artifacts land under writer-unique
     directory names and the manifest publish is a link(2) CAS — a
-    lost race raises instead of silently overwriting, and the loser's
-    staged directories are removed here (a crashed loser's are swept
-    by vacuum's reachability rule).  The default non-exclusive path
-    keeps overwrite-idempotent publishes for the scripted/guarded
-    single-writer lifecycle rebuilds, whose crash-recovery contract
-    is rerun-rewrites-the-same-version.  `_before_publish` is a test
-    seam: invoked after staging, immediately before the manifest CAS,
-    so a conflict landing inside that window is exercisable
+    lost race raises instead of silently overwriting, and a failed
+    commit's staged directories are removed here (a crashed writer's
+    are swept by vacuum's reachability rule).  A version is published
+    once: a caller that reruns a commit targets the next version or
+    rebuilds its chain from empty.  `_before_publish` is a test seam:
+    invoked after staging, immediately before the manifest CAS, so a
+    conflict landing inside that window is exercisable
     deterministically.
 
     `branch` stages the commit on a WAP branch instead of the main
     chain (see `wap_stage`): the parent is the branch's own previous
     manifest when one exists (second+ staged commit) and the MAIN
     manifest otherwise (first staged commit forks off the main head),
-    the manifest publishes as `manifest-{branch}-v{version}.json`
+    and the manifest publishes as `manifest-{branch}-v{version}.json`
     (invisible to every main-chain reader, which lists only
-    `manifest-v*.json` names), and staging always runs exclusive —
-    a main writer landing the same version number first is a conflict
-    surfaced HERE, at stage time, not later at publish."""
+    `manifest-v*.json` names) — a main writer landing the same version
+    number first is a conflict surfaced HERE, at stage time, not later
+    at publish."""
     main = log = VersionedLog(table_dir)
     parent = main
     if branch is not None:
         _check_branch_name(branch)
-        exclusive = True
         log = main.branch(branch)
         if os.path.exists(main.path(version)):
             # main advanced past the branch point: publishing this
@@ -281,7 +290,7 @@ def mor_cdc_commit(
             )
         if os.path.exists(log.path(version - 1)):
             parent = log
-    if exclusive and os.path.exists(log.path(version)):
+    if os.path.exists(log.path(version)):
         # conflict already visible: fail before staging any artifacts
         raise CommitConflictError(
             f"manifest v{version} of {table_dir} already published by "
@@ -297,80 +306,20 @@ def mor_cdc_commit(
     # between-compactions span); the parameter is only the fallback
     # for pre-spec manifests.
     n_files = int(prev.get("n_files", n_files))
-    # Frozen-bounds routing, clamped at BOTH ends (the zone-map append
-    # discipline): arrivals outside [lo, hi] land in the edge buckets.
-    routed = batch.withColumn(
-        "zb",
-        F.greatest(
-            F.lit(0),
-            bucket_expr(
-                F.col(key), F.lit(int(lo)), F.lit(int(hi)), n_files
-            ),
-        ),
-    ).localCheckpoint(eager=True)  # route once; DV + append reuse it
-    if exclusive:
-        import uuid
-
-        token = uuid.uuid4().hex[:8]
-        if branch is not None:
-            token = f"{branch}-{token}"
-        dv_dir = os.path.join(table_dir, f"dv-v{version}-{token}")
-        vdir = os.path.join(table_dir, f"v{version}-{token}")
-    else:
-        dv_dir = os.path.join(table_dir, f"dv-v{version}")
-        vdir = os.path.join(table_dir, f"v{version}")
-    routed.select(
-        "zb", F.col(key).alias("k"), F.col("version").alias("v")
-    ).write.mode("overwrite").json(dv_dir)
-    upserts = routed.filter(F.col("op") == "u").drop("op")
-    (
-        upserts.repartition(F.col("zb"))
-        .write.mode("overwrite")
-        .partitionBy("zb")
-        .parquet(vdir)
-    )
-    stats = _zb_stats(upserts, key)
-    files = {z: list(entries) for z, entries in prev["files"].items()}
-    for z in os.listdir(vdir):
-        if z.startswith("zb="):
-            files.setdefault(z[len("zb="):], []).append(
-                {
-                    "path": os.path.join(vdir, z),
-                    "v": version,
-                    **stats.get(z[len("zb="):], {}),
-                }
-            )
     # Schema-evolution audit trail: the union of columns ever
     # committed, plus which this commit added.  When the chain carries
     # field ids (`schema`), added columns get FRESH ids and this
     # commit's name map is recorded, so later renames/drops/widens
     # stay metadata-only (see mor_cdc_rename_column and friends);
     # resolution of the batch's columns against the current schema is
-    # BY NAME at commit time (Iceberg's write-side rule), and a stale
-    # producer still writing a renamed column's OLD name is a named
-    # ValueError (the stale-producer guard below), never a silent
-    # fresh-field shear.
-    cols = [c for c in upserts.columns if c != "zb"]
+    # BY NAME at commit time (Iceberg's write-side rule).  All of it
+    # needs only the batch's columns and the parent manifest, so a
+    # stale producer is refused here, before any Spark job runs.
+    cols = [c for c in batch.columns if c not in ("op", "zb")]
     prev_cols = prev.get("columns", [])
     added = [c for c in cols if c not in prev_cols]
-    from ..sources.timetravel import commit_wallclock_us
-
-    manifest = {
-        "key": key,
-        "bounds": [lo, hi],
-        "n_files": n_files,
-        "version": version,
-        "files": files,
-        "dvs": [*prev["dvs"], {"path": dv_dir, "v": version}],
-        "dv_floor": prev.get("dv_floor"),
-        "columns": [*prev_cols, *added],
-        "committed_at_us": commit_wallclock_us(
-            prev.get("committed_at_us")
-        ),
-    }
+    schema = None
     if prev.get("schema") is not None:
-        dtypes = dict(upserts.dtypes)
-        schema = [dict(f) for f in prev["schema"]]
         if added:
             # Stale-producer guard: a batch column whose name a LIVE
             # field carried immediately BEFORE its latest rename is a
@@ -386,7 +335,7 @@ def mor_cdc_commit(
             # of 'a' is legitimate (the name freed two renames ago),
             # while 'b' is still the signature of a producer exactly
             # one schema behind.
-            live = {f["id"]: f["name"] for f in schema}
+            live = {f["id"]: f["name"] for f in prev["schema"]}
             guarded: dict[int, str] = {}
             for v in sorted(
                 prev.get("commit_cols", {}), key=int, reverse=True
@@ -409,52 +358,94 @@ def mor_cdc_commit(
                             "writing a stale schema — update it or "
                             "rename the field back"
                         )
+        dtypes = dict(batch.dtypes)
+        schema = [dict(f) for f in prev["schema"]]
         # fresh ids come from the persisted high-water mark, NOT
         # max(live ids)+1 — a dropped max-id field's id must never be
         # re-issued (field_id_hwm's docstring has the failure mode)
-
         next_id = field_id_hwm(prev) + 1
         for c in added:
             schema.append(
                 {"id": next_id, "name": c, "type": dtypes.get(c, "string")}
             )
             next_id += 1
-        manifest["last_field_id"] = next_id - 1
-        manifest["schema"] = schema
-        manifest["commit_cols"] = {
-            **prev.get("commit_cols", {}),
-            str(version): {str(f["id"]): f["name"] for f in schema},
-        }
-    if added and prev_cols:
-        manifest["columns_added"] = added
-    if branch is not None:
-        manifest["branch"] = branch
-        # the main version this branch forked from: propagated from
-        # the branch parent, or the parent's own version when this is
-        # the first staged commit (parent = the main head)
-        manifest["branch_base"] = (
-            prev["branch_base"] if "branch_base" in prev
-            else prev["version"]
-        )
-    if _before_publish is not None:
-        _before_publish()
-    if exclusive:
-        try:
-            log.publish(manifest, version)
-        except CommitConflictError:
-            import shutil
+    # Frozen-bounds routing, clamped at BOTH ends (the zone-map append
+    # discipline): arrivals outside [lo, hi] land in the edge buckets.
+    routed = batch.withColumn(
+        "zb",
+        F.greatest(
+            F.lit(0),
+            bucket_expr(
+                F.col(key), F.lit(int(lo)), F.lit(int(hi)), n_files
+            ),
+        ),
+    ).localCheckpoint(eager=True)  # route once; DV + append reuse it
+    try:
+        with Staging(table_dir, version, branch) as st:
+            dv_dir, vdir = st.path("dv-"), st.path()
+            routed.select(
+                "zb", F.col(key).alias("k"), F.col("version").alias("v")
+            ).write.mode("overwrite").json(dv_dir)
+            upserts = routed.filter(F.col("op") == "u").drop("op")
+            (
+                upserts.repartition(F.col("zb"))
+                .write.mode("overwrite")
+                .partitionBy("zb")
+                .parquet(vdir)
+            )
+            stats = _zb_stats(upserts, key)
+            files = {z: list(entries) for z, entries in prev["files"].items()}
+            for z in os.listdir(vdir):
+                if z.startswith("zb="):
+                    files.setdefault(z[len("zb="):], []).append(
+                        {
+                            "path": os.path.join(vdir, z),
+                            "v": version,
+                            **stats.get(z[len("zb="):], {}),
+                        }
+                    )
+            from ..sources.timetravel import commit_wallclock_us
 
-            # lost the CAS: remove OUR staged dirs (they are writer-
-            # unique, so this touches no winner artifacts) and raise
-            for d in (dv_dir, vdir):
-                shutil.rmtree(d, ignore_errors=True)
-            release_local_checkpoints([routed])
-            raise
-    else:
-        log.write(manifest, version)
-    # both consumers (DV sidecar + appended files) have written: the
-    # routed batch's checkpoint blocks are dead weight from here
-    release_local_checkpoints([routed])
+            manifest = {
+                "key": key,
+                "bounds": [lo, hi],
+                "n_files": n_files,
+                "version": version,
+                "files": files,
+                "dvs": [*prev["dvs"], {"path": dv_dir, "v": version}],
+                "dv_floor": prev.get("dv_floor"),
+                "columns": [*prev_cols, *added],
+                "committed_at_us": commit_wallclock_us(
+                    prev.get("committed_at_us")
+                ),
+            }
+            if schema is not None:
+                manifest["last_field_id"] = field_id_hwm(prev) + len(added)
+                manifest["schema"] = schema
+                manifest["commit_cols"] = {
+                    **prev.get("commit_cols", {}),
+                    str(version): {str(f["id"]): f["name"] for f in schema},
+                }
+            if added and prev_cols:
+                manifest["columns_added"] = added
+            if branch is not None:
+                manifest["branch"] = branch
+                # the main version this branch forked from: propagated
+                # from the branch parent, or the parent's own version
+                # when this is the first staged commit (parent = the
+                # main head)
+                manifest["branch_base"] = (
+                    prev["branch_base"] if "branch_base" in prev
+                    else prev["version"]
+                )
+            if _before_publish is not None:
+                _before_publish()
+            log.publish(manifest, version)
+    finally:
+        # both consumers (DV sidecar + appended files) have written or
+        # the commit failed: the routed batch's checkpoint blocks are
+        # dead weight from here
+        release_local_checkpoints([routed])
     return manifest
 
 
@@ -582,8 +573,8 @@ def _read_manifest(
     for v, paths in sorted(by_commit.items()):
         # basePath = the commit's version directory, derived from the
         # manifest-listed paths themselves (every entry is
-        # <vdir>/zb=K) — exclusive commits use writer-unique vdir
-        # names, so version arithmetic cannot reconstruct it
+        # <vdir>/zb=K) — every commit uses a writer-unique vdir
+        # name, so version arithmetic cannot reconstruct it
         piece = spark.read.option(
             "basePath", os.path.dirname(paths[0])
         ).parquet(*paths).withColumn("_commit", F.lit(int(v)))
@@ -645,7 +636,7 @@ def _read_manifest(
         ).select(
             "k",
             F.col("v").cast("long").alias("v"),
-            # leading digits only: exclusive commits suffix the dir
+            # leading digits only: every commit suffixes the dir
             # with a writer token (dv-v7-3fa9c1d2), which must not
             # bleed into the recovered commit number
             F.regexp_extract(
@@ -709,8 +700,8 @@ def _evolve_schema_commit(
 
     Concurrency (VERDICT r13 ask #6 — the single-operator contract is
     now MECHANIZED, not a docstring): the publish routes through the
-    same link(2) CAS as exclusive data commits, so a concurrent
-    evolution, compaction, or exclusive writer targeting the same next
+    same link(2) CAS as data commits, so a concurrent
+    evolution, compaction, or data writer targeting the same next
     version loses with the named `CommitConflictError` instead of
     silently clobbering.  An evolution is ONE atomic JSON publish (no
     data files), so there is no crash window between doing and
@@ -930,8 +921,8 @@ class MorCdcSink:
         # DIFFERENT epoch's data (ADVICE r9); the commit-sequence
         # tie-break converges readers to one row per key.
         #
-        # Concurrency contract (VERDICT r11 ask #3): the commit runs
-        # EXCLUSIVE — artifacts staged under writer-unique names, the
+        # Concurrency contract (VERDICT r11 ask #3): the commit is a
+        # CAS — artifacts staged under writer-unique names, the
         # manifest published by link(2) CAS — so two concurrent
         # writers can never both land the same version silently; the
         # loser gets CommitConflictError and retries here from a
@@ -957,7 +948,7 @@ class MorCdcSink:
             try:
                 mor_cdc_commit(
                     self.spark, batch_df, self.table_dir, version,
-                    exclusive=True, branch=self.branch,
+                    branch=self.branch,
                 )
             except CommitConflictError as e:
                 last_err = e
@@ -1068,7 +1059,7 @@ def wap_stage(
 ) -> dict:
     """Stage one CDC epoch on `branch`: the next version after the
     branch head (or after the main head when the branch is empty —
-    the fork point), committed through the exclusive CAS path but
+    the fork point), committed through the CAS publish but
     published under the branch manifest name.  Main readers cannot
     see it; `wap_read` can."""
     _check_branch_name(branch)
@@ -1467,9 +1458,7 @@ def stream_mor_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     final = len(_doc_waves(d)) + 1
-    if not os.path.exists(
-        VersionedLog(table_dir).path(final)
-    ):
+    if build_from_empty(table_dir, VersionedLog(table_dir).path(final)):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         for i, wave in enumerate(_doc_waves(d)):
@@ -1578,16 +1567,13 @@ def mor_cdc_compact(
 
     Concurrency (VERDICT r13 ask #6): artifacts stage under
     writer-unique directory names and the manifest publishes through
-    the link(2) CAS, exactly like exclusive data commits — a
-    concurrent evolution/compaction/exclusive-writer race resolves to
+    the link(2) CAS, exactly like data commits — a
+    concurrent evolution/compaction/data-writer race resolves to
     ONE winner; the loser cleans up its staged directories and either
     adopts the winner (when the winner is an equivalent compaction of
     the same source version) or raises the named
     `CommitConflictError`.  A crash before the publish leaves only
     unreferenced staged dirs, which `mor_cdc_vacuum` reclaims."""
-    import shutil
-    import uuid
-
     m = VersionedLog(table_dir).load(version)
     key = m["key"]
     live = mor_cdc_read(spark, table_dir, version)
@@ -1615,137 +1601,128 @@ def mor_cdc_compact(
         else:
             lo, hi = int(b[0]), int(b[1])
     vnew = version + 1
-    # writer-unique staged names (the exclusive-commit rule): a CAS
-    # loser's cleanup can never touch the winner's artifacts
-    token = uuid.uuid4().hex[:8]
-    vdir = os.path.join(table_dir, f"v{vnew}-{token}")
-    routed = live.withColumn(
-        "zb",
-        F.greatest(
-            F.lit(0),
-            bucket_expr(
-                F.col(key), F.lit(int(lo)), F.lit(int(hi)), n_files
-            ),
-        ),
-    )
-    (
-        routed.repartition(F.col("zb"))
-        .write.mode("overwrite")
-        .partitionBy("zb")
-        .parquet(vdir)
-    )
-    zdirs = [z for z in os.listdir(vdir) if z.startswith("zb=")]
-    if not zdirs:
-        # fully-emptied table: partitionBy wrote no zb= dirs, but the
-        # manifest must still list a schema-carrying file so reads of
-        # this (empty) version can type themselves (ADVICE r12 —
-        # int(None) was only the first failure on this path)
-        routed.drop("zb").limit(0).write.mode("overwrite").parquet(
-            os.path.join(vdir, "zb=0")
-        )
-        zdirs = ["zb=0"]
-    stats = _zb_stats(
-        spark.read.option("basePath", vdir).parquet(vdir), key
-    )
-    files = {
-        z[len("zb="):]: [
-            {
-                "path": os.path.join(vdir, z),
-                "v": vnew,
-                **stats.get(z[len("zb="):], {}),
-            }
-        ]
-        for z in zdirs
-    }
-    dv = None
-    if m["dvs"]:
-        # one multi-path scan (the mor_cdc_read rule; compaction folds
-        # the whole vector history, so the branch count matters most
-        # here)
-        dv = spark.read.schema(DV_SIDECAR_SCHEMA).json(
-            [d["path"] for d in m["dvs"]]
-        ).select("k", F.col("v").cast("long").alias("v"))
-    if m.get("dv_floor"):
-        piece = spark.read.parquet(m["dv_floor"]).select(
-            "k", F.col("v").cast("long").alias("v")
-        )
-        dv = piece if dv is None else dv.unionByName(piece)
-    floor_path = None
-    if dv is not None:
-        floor_path = os.path.join(
-            table_dir, f"dv-floor-v{vnew}-{token}"
-        )
-        (
-            dv.groupBy("k")
-            .agg(F.max("v").alias("v"))
-            .withColumn("_commit", F.lit(int(vnew)).cast("long"))
-            .write.mode("overwrite")
-            .parquet(floor_path)
-        )
-    from ..sources.timetravel import commit_wallclock_us
-
-    manifest = {
-        "key": key,
-        "bounds": [lo, hi],
-        "n_files": n_files,
-        "version": vnew,
-        "files": files,
-        "dvs": [],
-        "dv_floor": floor_path,
-        "columns": m.get("columns", []),
-        "compacted_from": version,
-        "committed_at_us": commit_wallclock_us(
-            m.get("committed_at_us")
-        ),
-    }
-
-    if m.get("schema") is not None:
-        # the rewrite materialized CURRENT names/types: keep the field
-        # ids but reset the per-commit name maps to this one commit —
-        # compaction is what bounds commit_cols growth.  The id
-        # high-water mark MUST be pinned here: resetting commit_cols
-        # destroys the derive-from-history fallback, so without the
-        # persisted mark a post-compaction drop/re-add could re-issue
-        # a pre-compaction dropped id.
-        manifest["schema"] = m["schema"]
-        manifest["last_field_id"] = field_id_hwm(m)
-        manifest["commit_cols"] = {
-            str(vnew): {
-                str(f["id"]): f["name"] for f in m["schema"]
-            }
-        }
-    else:
-        # LEGACY FIELD-ID ADOPTION (ADVICE r13): chains that predate
-        # field-id schemas can only evolve after a rewrite
-        # materializes the current names/types — which is exactly
-        # what this compaction just did.  Synthesize fresh ids from
-        # the rewritten frame so _evolve_schema_commit's remediation
-        # ("a compaction rewrite adopts field-id schemas") is real,
-        # not a dead end.
-        dtypes = dict(live.dtypes)
-        adopted = [
-            {"id": i + 1, "name": c, "type": dtypes[c]}
-            for i, c in enumerate(
-                c for c in manifest["columns"] if c in dtypes
-            )
-        ]
-        manifest["schema"] = adopted
-        manifest["last_field_id"] = max(
-            (f["id"] for f in adopted), default=0
-        )
-        manifest["commit_cols"] = {
-            str(vnew): {str(f["id"]): f["name"] for f in adopted}
-        }
-
     try:
-        VersionedLog(table_dir).publish(manifest, vnew)
+        with Staging(table_dir, vnew) as st:
+            vdir = st.path()
+            routed = live.withColumn(
+                "zb",
+                F.greatest(
+                    F.lit(0),
+                    bucket_expr(
+                        F.col(key), F.lit(int(lo)), F.lit(int(hi)), n_files
+                    ),
+                ),
+            )
+            (
+                routed.repartition(F.col("zb"))
+                .write.mode("overwrite")
+                .partitionBy("zb")
+                .parquet(vdir)
+            )
+            zdirs = [z for z in os.listdir(vdir) if z.startswith("zb=")]
+            if not zdirs:
+                # fully-emptied table: partitionBy wrote no zb= dirs, but the
+                # manifest must still list a schema-carrying file so reads of
+                # this (empty) version can type themselves (ADVICE r12 —
+                # int(None) was only the first failure on this path)
+                routed.drop("zb").limit(0).write.mode("overwrite").parquet(
+                    os.path.join(vdir, "zb=0")
+                )
+                zdirs = ["zb=0"]
+            stats = _zb_stats(
+                spark.read.option("basePath", vdir).parquet(vdir), key
+            )
+            files = {
+                z[len("zb="):]: [
+                    {
+                        "path": os.path.join(vdir, z),
+                        "v": vnew,
+                        **stats.get(z[len("zb="):], {}),
+                    }
+                ]
+                for z in zdirs
+            }
+            dv = None
+            if m["dvs"]:
+                # one multi-path scan (the mor_cdc_read rule; compaction folds
+                # the whole vector history, so the branch count matters most
+                # here)
+                dv = spark.read.schema(DV_SIDECAR_SCHEMA).json(
+                    [d["path"] for d in m["dvs"]]
+                ).select("k", F.col("v").cast("long").alias("v"))
+            if m.get("dv_floor"):
+                piece = spark.read.parquet(m["dv_floor"]).select(
+                    "k", F.col("v").cast("long").alias("v")
+                )
+                dv = piece if dv is None else dv.unionByName(piece)
+            floor_path = None
+            if dv is not None:
+                floor_path = st.path("dv-floor-")
+                (
+                    dv.groupBy("k")
+                    .agg(F.max("v").alias("v"))
+                    .withColumn("_commit", F.lit(int(vnew)).cast("long"))
+                    .write.mode("overwrite")
+                    .parquet(floor_path)
+                )
+            from ..sources.timetravel import commit_wallclock_us
+
+            manifest = {
+                "key": key,
+                "bounds": [lo, hi],
+                "n_files": n_files,
+                "version": vnew,
+                "files": files,
+                "dvs": [],
+                "dv_floor": floor_path,
+                "columns": m.get("columns", []),
+                "compacted_from": version,
+                "committed_at_us": commit_wallclock_us(
+                    m.get("committed_at_us")
+                ),
+            }
+
+            if m.get("schema") is not None:
+                # the rewrite materialized CURRENT names/types: keep the field
+                # ids but reset the per-commit name maps to this one commit —
+                # compaction is what bounds commit_cols growth.  The id
+                # high-water mark MUST be pinned here: resetting commit_cols
+                # destroys the derive-from-history fallback, so without the
+                # persisted mark a post-compaction drop/re-add could re-issue
+                # a pre-compaction dropped id.
+                manifest["schema"] = m["schema"]
+                manifest["last_field_id"] = field_id_hwm(m)
+                manifest["commit_cols"] = {
+                    str(vnew): {
+                        str(f["id"]): f["name"] for f in m["schema"]
+                    }
+                }
+            else:
+                # LEGACY FIELD-ID ADOPTION (ADVICE r13): chains that predate
+                # field-id schemas can only evolve after a rewrite
+                # materializes the current names/types — which is exactly
+                # what this compaction just did.  Synthesize fresh ids from
+                # the rewritten frame so _evolve_schema_commit's remediation
+                # ("a compaction rewrite adopts field-id schemas") is real,
+                # not a dead end.
+                dtypes = dict(live.dtypes)
+                adopted = [
+                    {"id": i + 1, "name": c, "type": dtypes[c]}
+                    for i, c in enumerate(
+                        c for c in manifest["columns"] if c in dtypes
+                    )
+                ]
+                manifest["schema"] = adopted
+                manifest["last_field_id"] = max(
+                    (f["id"] for f in adopted), default=0
+                )
+                manifest["commit_cols"] = {
+                    str(vnew): {str(f["id"]): f["name"] for f in adopted}
+                }
+            VersionedLog(table_dir).publish(manifest, vnew)
     except CommitConflictError:
-        # lost the maintenance CAS: remove OUR staged dirs (writer-
-        # unique, so this touches no winner artifacts), then either
-        # adopt an equivalent winner or surface the named conflict
-        shutil.rmtree(vdir, ignore_errors=True)
-        if floor_path is not None:
-            shutil.rmtree(floor_path, ignore_errors=True)
+        # lost the maintenance CAS (our staged dirs are gone): adopt an
+        # equivalent winner or surface the named conflict
         winner = VersionedLog(table_dir).load(vnew)
         if winner.get("compacted_from") == version and int(
             winner.get("n_files", -1)
@@ -1960,9 +1937,7 @@ def stream_mor_cdc_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     waves = _evolve_waves(d)
     final = len(waves) + 1
-    if not os.path.exists(
-        VersionedLog(table_dir).path(final)
-    ):
+    if build_from_empty(table_dir, VersionedLog(table_dir).path(final)):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         for i, wave in enumerate(waves):
@@ -2041,16 +2016,7 @@ def _rename_lifecycle(spark: SparkSession, sf_dir: str) -> str:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.col("n_chars").cast("int").alias("n_chars")
     )
-    if not os.path.exists(
-        VersionedLog(table_dir).path(7)
-    ):
-        # rerun-safe (the src_cow_rename rule, ADVICE r14): the
-        # rename/widen/drop steps resolve the CURRENT head, so a
-        # rerun over a crashed partial chain would raise ("no column
-        # n_chars") instead of converging — rebuild from v1
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    if build_from_empty(table_dir, VersionedLog(table_dir).path(7)):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         mor_cdc_commit(
@@ -2139,17 +2105,7 @@ def stream_mor_cdc_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("int").alias("n_chars")
     )
-    if not os.path.exists(
-        VersionedLog(table_dir).path(6)
-    ):
-        # rerun-safe (the src_cow_readd rule): a crash mid-chain
-        # leaves a head whose schema already carries flag/quality, so
-        # a rerun's evolution steps (which derive versions and names
-        # from the CURRENT head) would raise instead of converging —
-        # scratch is pid-scoped, partial state is OUR dead attempt
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
+    if build_from_empty(table_dir, VersionedLog(table_dir).path(6)):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         mor_cdc_add_column(table_dir, "flag", "int")      # v2: max id
@@ -2322,9 +2278,7 @@ def stream_mor_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     waves = _doc_waves(d)
     final = len(waves) + 2  # +1 base, +1 compaction
-    if not os.path.exists(
-        VersionedLog(table_dir).path(final)
-    ):
+    if build_from_empty(table_dir, VersionedLog(table_dir).path(final)):
         mor_cdc_init(
             spark, d.withColumn("version", F.lit(0)), table_dir,
             "doc_id",
@@ -2487,14 +2441,14 @@ def stream_mor_cdc_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     waves = _doc_waves(d)
     final = len(waves) + 1
     record = VersionedLog(table_dir, "vacuum")
-    if not os.path.exists(record.path(final + 1)):
+    if build_from_empty(table_dir, record.path(final + 1)):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         for i, wave in enumerate(waves):
             mor_cdc_commit(spark, wave, table_dir, 2 + i)
         mor_cdc_compact(spark, table_dir, final)
         stats = mor_cdc_vacuum(table_dir, latest=final + 1)
-        record.write(stats, final + 1)
+        record.publish(stats, final + 1)
     stats = record.load(final + 1)
     return (
         mor_cdc_read(spark, table_dir, final + 1)
@@ -2572,16 +2526,16 @@ def mor_cdc_change_feed(
         )
     m = log.load(version)
     key = m["key"]
-    # this commit's DV sidecar, located through the MANIFEST (an
-    # exclusive commit's sidecar carries a writer-unique suffix, so
-    # version arithmetic cannot reconstruct the path)
+    # this commit's DV sidecar, located through the MANIFEST (every
+    # sidecar carries a writer-unique suffix, so version arithmetic
+    # cannot reconstruct the path); a compaction or evolution has none
     dv_dir = next(
-        (d["path"] for d in m["dvs"] if int(d["v"]) == version),
-        os.path.join(table_dir, f"dv-v{version}"),
+        (d["path"] for d in m["dvs"] if int(d["v"]) == version), None
     )
+    has_dv = dv_dir is not None and os.path.isdir(dv_dir)
     if (
         m.get("compacted_from") is not None or m.get("evolution")
-    ) and not os.path.isdir(dv_dir):
+    ) and not has_dv:
         # OPTIMIZE commit: files rewritten, no logical row changes —
         # the feed is empty by definition (Delta CDF semantics for
         # compaction commits).  Typed via a limit(0) read of the
@@ -2602,7 +2556,7 @@ def mor_cdc_change_feed(
                 )
             ],
         )
-    if not (os.path.exists(log.path(version - 1)) and os.path.isdir(dv_dir)):
+    if not (os.path.exists(log.path(version - 1)) and has_dv):
         raise ChangeFeedRetentionError(
             f"change feed requested for commit v{version} of "
             f"{table_dir}, but its pre-image manifest "
@@ -2690,8 +2644,8 @@ def mor_cdc_change_feed(
     if post_paths:
         # net post-image: the appended copy at the key's max change
         # version this commit (absent when that change is a delete);
-        # basePath derived from the manifest-listed paths — exclusive
-        # commits use writer-unique version-directory names
+        # basePath derived from the manifest-listed paths — every
+        # commit uses a writer-unique version-directory name
         post = (
             spark.read.option(
                 "basePath", os.path.dirname(post_paths[0])

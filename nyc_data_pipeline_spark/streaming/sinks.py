@@ -263,6 +263,7 @@ class ZoneMapAppendSink:
         return {}
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        from ..sources.vlog import VersionedLog
         from ..sources.zonemap import _zm_append
 
         ledger = self._read_ledger()
@@ -271,7 +272,10 @@ class ZoneMapAppendSink:
         if batch_df.isEmpty():
             return
         version = (max((int(v) for v in ledger.values()), default=1)) + 1
-        _zm_append(self.spark, batch_df, self.table_dir, version)
+        if not os.path.exists(VersionedLog(self.table_dir).path(version)):
+            _zm_append(self.spark, batch_df, self.table_dir, version)
+        # else: a crash landed this replayed epoch's commit before its
+        # ledger entry — versions publish once, so adopt it
         from ..sources.scans import atomic_json_dump
 
         ledger[str(epoch_id)] = version

@@ -304,6 +304,7 @@ def main(k: int, n_files: int) -> dict:
     # must scan only its churned bucket's v1 files, the global feed
     # pays the occupied-bucket count — the zb_filter manifest pruning
     # measured at n_files files.
+    from nyc_data_pipeline_spark.sources.vlog import staged_version
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_init as _cdc_init2,
@@ -333,7 +334,10 @@ def main(k: int, n_files: int) -> dict:
         F.count("*"), F.sum("post_cents")
     ).write.format("noop").mode("overwrite").save()
     out["feed_t_local"] = round(time.perf_counter() - t0, 2)
-    v1_files = [p for p in feed_local.inputFiles() if "/v1/" in p]
+    v1_files = [
+        p for p in feed_local.inputFiles()
+        if 1 in map(staged_version, p.split("/"))
+    ]
     out["feed_local_v1_buckets"] = len(
         {s for p in v1_files for s in p.split("/") if s.startswith("zb=")}
     )
@@ -345,7 +349,7 @@ def main(k: int, n_files: int) -> dict:
     out["feed_t_global"] = round(time.perf_counter() - t0, 2)
     pre_files = [
         p for p in feed_global.inputFiles()
-        if "/v1/" in p or "/v2/" in p
+        if {1, 2} & set(map(staged_version, p.split("/")))
     ]
     out["feed_global_pre_buckets"] = len(
         {s for p in pre_files for s in p.split("/") if s.startswith("zb=")}

@@ -161,6 +161,7 @@ def test_ivfpq_append_inherits_artifacts_and_adds_only_new_files(
     from nyc_data_pipeline_spark.registry import QUERIES, load_all
     from nyc_data_pipeline_spark.similarity.index_store import BATCH_PRED
     from nyc_data_pipeline_spark.sources.scans import scratch_dir
+    from nyc_data_pipeline_spark.sources.vlog import staged_version
     import pyspark.sql.functions as F
 
     load_all()
@@ -174,7 +175,7 @@ def test_ivfpq_append_inherits_artifacts_and_adds_only_new_files(
     assert m2["codebook"] == m1["codebook"]
     assert m2["codes"][:-1] == [m1["codes"]]
     new_path = m2["codes"][-1]
-    assert "/v2/" in new_path
+    assert staged_version(_os.path.basename(_os.path.dirname(new_path))) == 2
     new_ids = (
         spark.read.option("basePath", new_path)
         .parquet(new_path)

@@ -643,6 +643,7 @@ def test_index_rebuild_swap_reader_isolation(spark, sf_dir):
         ivf_adc_search,
     )
     from nyc_data_pipeline_spark.sources.scans import scratch_dir
+    from nyc_data_pipeline_spark.sources.vlog import staged_version
 
     def probe_v2(table_dir, emb, queries):
         with open(
@@ -685,7 +686,10 @@ def test_index_rebuild_swap_reader_isolation(spark, sf_dir):
     v2_paths = set(m2["codes"]) | {m2["centroids"], m2["codebook"]}
     v3_paths = {m3["codes"], m3["centroids"], m3["codebook"]}
     assert v2_paths.isdisjoint(v3_paths)
-    assert all("/v3/" in p for p in v3_paths)
+    assert all(
+        staged_version(_os.path.basename(_os.path.dirname(p))) == 3
+        for p in v3_paths
+    )
     # the rebuilt probe never touches a v1/v2 artifact
     cent3 = spark.read.parquet(m3["centroids"])
     cb3 = spark.read.parquet(m3["codebook"])

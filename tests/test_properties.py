@@ -969,8 +969,9 @@ def test_mor_cdc_feed_pruning_is_lossless(spark, tmp_path_factory, raw, rng):
         }
         with open(_os.path.join(tdir, f"manifest-v{v}.json")) as f:
             m = _json.load(f)
+        dv_dir = next(d["path"] for d in m["dvs"] if int(d["v"]) == v)
         keys = (
-            spark.read.json(_os.path.join(tdir, f"dv-v{v}"))
+            spark.read.json(dv_dir)
             .select(F.col("k").cast("bigint").alias("k"))
             .distinct()
         )

@@ -1688,6 +1688,7 @@ def test_change_feed_prunes_pre_image_to_churned_buckets(spark, tmp_path):
     leave v1's zb=2..7 directories out of the feed's input files —
     asserted on `inputFiles()`, the physical scan set — while the
     feed rows themselves stay exact."""
+    from nyc_data_pipeline_spark.sources.vlog import staged_version
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_commit,
@@ -1708,7 +1709,10 @@ def test_change_feed_prunes_pre_image_to_churned_buckets(spark, tmp_path):
     )
     mor_cdc_commit(spark, wave, table_dir, 2)
     feed = mor_cdc_change_feed(spark, table_dir, 2)
-    v1_files = [p for p in feed.inputFiles() if "/v1/" in p]
+    v1_files = [
+        p for p in feed.inputFiles()
+        if 1 in map(staged_version, p.split("/"))
+    ]
     assert v1_files, "feed must read some v1 pre-image files"
     churned = {"zb=0", "zb=1"}
     for p in v1_files:
@@ -1985,11 +1989,11 @@ def test_mor_cdc_concurrent_writers_serialize_or_raise(spark, tmp_path):
 
     # (a) pre-check window: A lands v2 first, B's attempt at v2 must
     # fail BEFORE staging (no stray B directories appear)
-    mor_cdc_commit(spark, wave(0, 50, 1, 1), table_dir, 2, exclusive=True)
+    mor_cdc_commit(spark, wave(0, 50, 1, 1), table_dir, 2)
     dirs_before = set(os.listdir(table_dir))
     with pytest.raises(CommitConflictError):
         mor_cdc_commit(
-            spark, wave(100, 150, 2, 1), table_dir, 2, exclusive=True
+            spark, wave(100, 150, 2, 1), table_dir, 2
         )
     assert set(os.listdir(table_dir)) == dirs_before
     # (b) CAS window: B passes the pre-check for v3, A publishes v3
@@ -1997,14 +2001,14 @@ def test_mor_cdc_concurrent_writers_serialize_or_raise(spark, tmp_path):
     # up its own staged dirs, and leave A's v3 untouched
     def land_a_first():
         mor_cdc_commit(
-            spark, wave(0, 50, 3, 2), table_dir, 3, exclusive=True
+            spark, wave(0, 50, 3, 2), table_dir, 3
         )
 
     dirs_before = set(os.listdir(table_dir))
     with pytest.raises(CommitConflictError):
         mor_cdc_commit(
             spark, wave(100, 150, 2, 1), table_dir, 3,
-            exclusive=True, _before_publish=land_a_first,
+            _before_publish=land_a_first,
         )
     added = set(os.listdir(table_dir)) - dirs_before
     # only A's v3 artifacts + manifest may have appeared; B's staged
@@ -2020,7 +2024,7 @@ def test_mor_cdc_concurrent_writers_serialize_or_raise(spark, tmp_path):
     for d in added - {"manifest-v3.json"}:
         assert d in referenced, f"orphan from the losing writer: {d}"
     # serialization: B retries from a fresh read at v4 and wins
-    mor_cdc_commit(spark, wave(100, 150, 2, 1), table_dir, 4, exclusive=True)
+    mor_cdc_commit(spark, wave(100, 150, 2, 1), table_dir, 4)
     rows = {r["k"]: r["cents"] for r in
             mor_cdc_read(spark, table_dir, 4).collect()}
     assert len(rows) == 200
@@ -2066,7 +2070,7 @@ def test_mor_cdc_sink_concurrent_epochs_both_land(spark, tmp_path):
         if not state["fired"] and version == 2:
             state["fired"] = True
             # writer A lands v2 inside writer B's derive→commit window
-            orig_commit(spark_, wave_a, tdir, 2, exclusive=True)
+            orig_commit(spark_, wave_a, tdir, 2)
         return orig_commit(spark_, batch, tdir, version, **kw)
 
     mc.mor_cdc_commit = racing_commit
@@ -2489,6 +2493,7 @@ def test_mor_cdc_rebucket_feed_and_skipping_cross_spec(spark, tmp_path):
     commit is lossless AND still prunes its pre-image to churned
     buckets of the new spec, and (c) a key_range read across the
     boundary stays exact with files skipped at the manifest."""
+    from nyc_data_pipeline_spark.sources.vlog import staged_version
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_commit,
@@ -2517,7 +2522,8 @@ def test_mor_cdc_rebucket_feed_and_skipping_cross_spec(spark, tmp_path):
     assert all(c == "update" for c, _ in rows.values())
     assert rows[399] == ("update", 3992)
     pre_files = [
-        f for f in feed.inputFiles() if "/v3/" in f or "/v3" in f
+        f for f in feed.inputFiles()
+        if 3 in map(staged_version, f.split("/"))
     ]
     assert pre_files and all("zb=7" in f for f in pre_files)
     # (c) key-range read across the spec boundary: v4 files skipped
@@ -3311,6 +3317,37 @@ def test_stale_producer_rejected_after_rename(spark, tmp_path):
     mor_cdc_commit(spark, fresh, table_dir, 3)  # new name: fine
 
 
+def test_stale_producer_rejected_before_any_spark_job(spark, tmp_path):
+    """The stale-producer guard needs only the batch's columns and the
+    parent manifest, so it runs before routing: a stale batch whose
+    column cannot even be evaluated (`raise_error`) still gets the
+    named ValueError — proof that no Spark job ran, and that a
+    rejected batch costs no write."""
+    import os as _os
+
+    import pytest
+
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        mor_cdc_commit,
+        mor_cdc_rename_column,
+    )
+
+    table_dir = _evo_table(spark, tmp_path, "stale_nojob")
+    mor_cdc_rename_column(table_dir, "cents", "amount")
+    before = set(_os.listdir(table_dir))
+    stale = spark.range(5).select(
+        F.col("id").alias("k"),
+        F.raise_error(F.lit("stale batch was evaluated"))
+        .cast("int")
+        .alias("cents"),  # pre-rename name
+        F.lit(1).alias("version"),
+        F.lit("u").alias("op"),
+    )
+    with pytest.raises(ValueError, match="stale schema"):
+        mor_cdc_commit(spark, stale, table_dir, 3)
+    assert set(_os.listdir(table_dir)) == before  # nothing staged
+
+
 def test_freed_rename_name_is_reusable_after_later_rename(
     spark, tmp_path
 ):
@@ -3576,7 +3613,6 @@ def test_wap_publish_loses_fork_race_cleanly(spark, tmp_path):
     # the concurrent writer wins v2 with a REAL commit
     mor_cdc_commit(
         spark, _wap_wave(spark, 30, 35, 9, 1), table_dir, 2,
-        exclusive=True,
     )
     with pytest.raises(CommitConflictError, match="restage"):
         wap_publish(table_dir, "audit")
@@ -3966,11 +4002,11 @@ def test_maintenance_cas_serializes_evolution_compaction_exclusive(
     )
     with pytest.raises(CommitConflictError, match="concurrent"):
         mor_cdc_commit(
-            spark, wave, table_dir, 5, exclusive=True,
+            spark, wave, table_dir, 5,
             _before_publish=lambda: mor_cdc_compact(spark, table_dir, 4),
         )
     assert _latest_main_version(table_dir) == 5  # the compaction
-    mor_cdc_commit(spark, wave, table_dir, 6, exclusive=True)  # rebase
+    mor_cdc_commit(spark, wave, table_dir, 6)  # rebase
 
     # --- two EQUIVALENT compactions: the loser adopts the winner -----
     inject_once(lambda: mor_cdc_compact(spark, table_dir, 6))
@@ -4100,6 +4136,34 @@ def test_mor_vacuum_never_collects_inflight_staged_dirs(spark, tmp_path):
     assert not _os.path.isdir(loser_data)  # version 1 <= head, garbage
     assert not _os.path.isdir(loser_dv)
     assert mor_cdc_read(spark, table_dir, 1).count() == 400
+
+
+def test_mor_vacuum_reclaims_branch_staged_orphans(spark, tmp_path):
+    """A crashed `wap_stage` leaves `v{N}-{branch}-{hex}` data and
+    `dv-v{N}-{branch}-{hex}` sidecar directories that no manifest names
+    (`wap_discard` only deletes what a branch manifest lists); once the
+    head is at or past N, vacuum reclaims them like any other orphan."""
+    import os as _os
+
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        mor_cdc_commit,
+        mor_cdc_read,
+        mor_cdc_vacuum,
+    )
+
+    table_dir = _mk_cdc_table(spark, tmp_path, "cdc_vac_branch_orphan")
+    mor_cdc_commit(spark, _wap_wave(spark, 0, 50, 1, 1), table_dir, 2)
+    mor_cdc_commit(spark, _wap_wave(spark, 50, 100, 2, 1), table_dir, 3)
+    orphan_data = _os.path.join(table_dir, "v3-verify-1a2b3c4d", "zb=0")
+    orphan_dv = _os.path.join(table_dir, "dv-v3-verify-1a2b3c4d")
+    _os.makedirs(orphan_data)
+    _os.makedirs(orphan_dv)
+    open(_os.path.join(orphan_data, "part-0.parquet"), "w").write("x")
+    open(_os.path.join(orphan_dv, "dv.json"), "w").write("{}")
+    mor_cdc_vacuum(table_dir, latest=3, retain=1)
+    assert not _os.path.exists(orphan_data)
+    assert not _os.path.exists(orphan_dv)
+    assert mor_cdc_read(spark, table_dir, 3).count() == 400
 
 
 def test_mor_lifecycles_rerun_after_partial_state(spark, sf_dir):

@@ -11,8 +11,11 @@ import pytest
 
 from nyc_data_pipeline_spark.sources.vlog import (
     DATA_DIR_RE,
+    DV_DIR_RE,
     CommitConflictError,
+    Staging,
     VersionedLog,
+    staged_version,
     sweep,
 )
 
@@ -63,14 +66,12 @@ def test_publish_twice_raises_commit_conflict(tmp_path):
         log.publish({"version": 1, "other": True}, 1)
     assert log.load(1) == {"version": 1}  # the winner stays
     assert [f for f in os.listdir(log.dir) if f.endswith(".tmp")] == []
-    log.write({"version": 1, "rerun": True}, 1)  # overwrite publish
-    assert log.load() == {"version": 1, "rerun": True}
 
 
 def test_expire_refuses_zero_and_keeps_window(tmp_path):
     log = VersionedLog(str(tmp_path))
     for v in range(1, 6):
-        log.write({"version": v}, v)
+        log.publish({"version": v}, v)
     with pytest.raises(ValueError, match="retain"):
         log.expire(0)
     assert log.versions() == [1, 2, 3, 4, 5]
@@ -85,7 +86,7 @@ def test_load_expired_raises_lane_error(tmp_path):
 
     log = VersionedLog(str(tmp_path), "catalog", LaneRetentionError)
     for v in range(1, 4):
-        log.write({"version": v}, v)
+        log.publish({"version": v}, v)
     log.expire(1)
     with pytest.raises(LaneRetentionError, match="reclaimed"):
         log.load(2)
@@ -103,9 +104,11 @@ def test_as_of_before_first_retained_commit(tmp_path):
 
     log = VersionedLog(str(tmp_path))
     for v, ts in ((1, 100), (2, 200), (3, 300)):
-        log.write({"version": v, "committed_at_us": ts}, v)
+        log.publish({"version": v, "committed_at_us": ts}, v)
     # a wap_publish intermediate whose head never landed is no commit
-    log.write({"version": 4, "committed_at_us": 400, "pending_head": 6}, 4)
+    log.publish(
+        {"version": 4, "committed_at_us": 400, "pending_head": 6}, 4
+    )
     assert log.as_of(250) == 2
     assert log.as_of(10_000) == 3
     log.expire(2)
@@ -124,6 +127,40 @@ def test_sweep_spares_staged_dirs_above_latest(tmp_path):
         os.path.relpath(os.path.join(r, x), d)
         for r, ds, _ in os.walk(d) for x in ds if x.startswith("zb=")
     ) == ["v1/zb=1", "v3-cafe/zb=0"]
+
+
+def test_staging_names_are_writer_unique_and_parse(tmp_path):
+    d = str(tmp_path)
+    a, b = Staging(d, 3), Staging(d, 3, branch="verify")
+    names = [os.path.basename(p) for p in (
+        a.path(), a.path("dv-"), a.path("dv-floor-"), b.path(), b.path("dv-"),
+    )]
+    assert names[0] != os.path.basename(Staging(d, 3).path())
+    assert re.fullmatch(r"v3-[0-9a-f]{8}", names[0])
+    assert re.fullmatch(r"v3-verify-[0-9a-f]{8}", names[3])
+    assert staged_version(names[0]) == staged_version(names[3]) == 3
+    for n in names[1:3] + names[4:]:
+        assert re.fullmatch(DV_DIR_RE, n).group(1) == "3"
+    # chains written before every commit was staged keep parsing
+    assert staged_version("v12") == 12 and staged_version("zb=1") is None
+    assert re.fullmatch(DATA_DIR_RE, "v3-verify-1a2b3c4d")
+    assert re.fullmatch(DV_DIR_RE, "dv-v3-verify-1a2b3c4d")
+
+
+def test_staging_removes_its_dirs_only_on_failure(tmp_path):
+    d = str(tmp_path)
+    with Staging(d, 1) as st:
+        kept = st.path()
+        os.makedirs(os.path.join(kept, "zb=0"))
+    assert os.path.isdir(kept)
+    with pytest.raises(CommitConflictError):
+        with Staging(d, 2) as st:
+            data, dv = st.path(), st.path("dv-")
+            os.makedirs(os.path.join(data, "zb=0"))
+            os.makedirs(dv)
+            raise CommitConflictError("lost the race")
+    assert not os.path.exists(data) and not os.path.exists(dv)
+    assert sorted(os.listdir(d)) == [os.path.basename(kept)]
 
 
 # --- guard: the manifest name format lives in sources/vlog.py only ---
@@ -204,3 +241,80 @@ def test_guard_catches_each_spelling(tmp_path):
         'g = "-v"\n'
     )
     assert [line for line, _ in _manifest_name_sites(str(p))] == [2, 3, 4, 5]
+
+
+# --- guard: staged directory names live in sources/vlog.py only ---
+
+# `v{…}`, `dv-v{…}` or `dv-floor-v{…}` as a whole path component
+_STAGED_TEMPLATE = re.compile(
+    r"(?:^|/)(?:dv-(?:floor-)?)?v\{\}(?:-\{\}|-[0-9a-f]+)*(?:/|$)"
+)
+_STAGED_LITERAL = re.compile(r"(?:dv-(?:floor-)?)?v\d+(?:-[0-9a-f]+)?")
+
+
+def _staged_name_sites(path):
+    """f-strings that spell a staged directory name, and literal ones
+    passed to a path join (a bare literal like "v0" is a column name
+    elsewhere, so literals count only as path components)."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    sites = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.JoinedStr):
+            template = "".join(
+                v.value if isinstance(v, ast.Constant) else "{}"
+                for v in node.values
+            )
+            if _STAGED_TEMPLATE.search(template):
+                sites.append((node.lineno, template))
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "join"
+        ):
+            sites += [
+                (a.lineno, a.value)
+                for a in node.args
+                if isinstance(a, ast.Constant) and isinstance(a.value, str)
+                and _STAGED_LITERAL.fullmatch(a.value)
+            ]
+    return sorted(sites)
+
+
+def test_only_vlog_builds_staged_names():
+    """No module but sources/vlog.py spells a staged directory name:
+    every commit stages through `Staging`, so each staged name is
+    writer-unique and removed when its commit fails."""
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for name in files:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, PKG)
+            if not name.endswith(".py") or rel == os.path.join(
+                "sources", "vlog.py"
+            ):
+                continue
+            offenders += [
+                f"{rel}:{line}: {text}"
+                for line, text in _staged_name_sites(path)
+            ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_staged_guard_catches_each_spelling(tmp_path):
+    p = tmp_path / "m.py"
+    p.write_text(
+        '"""Docs may say v{N}-{token} and dv-v3."""\n'
+        'a = os.path.join(d, f"v{version}-{token}")\n'
+        'b = os.path.join(d, "v2")\n'
+        'c = f"dv-floor-v{v}"\n'
+        'e = f"{d}/dv-v{v}/zb=0"\n'
+        'g = os.path.join(d, "v1", "bands")\n'
+        'h = f"v{n} past this head; retry"\n'
+        'i = F.col("v0")\n'
+        'j = f"commit v{v} of {d} was reclaimed"\n'
+        'k = os.path.join(d, "zb=0")\n'
+    )
+    assert [line for line, _ in _staged_name_sites(str(p))] == [
+        2, 3, 4, 5, 6,
+    ]
